@@ -53,13 +53,17 @@ object QueryDiag {
       SparkEntry.queries.get(name) match {
         case Some(fn) =>
           lines.clear()
+          stages.clear()
           val t0 = System.nanoTime()
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           val total = (System.nanoTime() - t0) / 1e9
           spark.catalog.clearCache()
-          // listener delivery is async; a short pause drains the bus
-          Thread.sleep(500)
-          println(s"===== $name total ${f"$total%.2f"} s, ${lines.size} jobs =====")
+          // listener delivery is async: wait until every queued event
+          // has reached the listener
+          org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+          // stage lines of slow jobs share the queue; count the jobs only
+          val jobs = lines.stream().filter(_.startsWith("job ")).count()
+          println(s"===== $name total ${f"$total%.2f"} s, $jobs jobs =====")
           lines.forEach(l => println(l))
         case None => System.err.println(s"[diag] unknown query: $name")
       }

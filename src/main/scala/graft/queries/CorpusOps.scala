@@ -371,7 +371,7 @@ object CorpusOps {
           "doc_id", "text", NearDupThreshold, PrIters, PrDampPpm,
           state, b.toLong, validateDisjoint = false)
         if (b == 0) seedCaches.foreach(_.unpersist())
-      } finally staticIndex.release()
+      } finally { seedCaches.foreach(_.unpersist()); staticIndex.release() }
       java.nio.file.Files.createDirectories(root)
       java.nio.file.Files.write(windowTag, Array.emptyByteArray)
     }
@@ -599,16 +599,16 @@ object CorpusOps {
     val stream = docs
       .filter(col("doc_id") >= C9CorpusEnd && col("doc_id") < C9StreamEnd)
     val root = java.nio.file.Files.createTempDirectory("graft_waves_").toString
+    // seed pairs derive from the index's ONE persisted text pass
+    // (nearDuplicates would re-persist a plan-aliased copy of the
+    // hashed sets — the r19 residency pathology); every cache the seed
+    // derivation takes is released as soon as the seed labels are
+    // checkpointed, so the wave loop runs with exactly ONE corpus-side
+    // cached frame (the index) live, and again on every exit path
+    val (seedPairs, seedCaches) = MinHashDedup
+      .nearDuplicatesFromIndexWithCaches(staticIndex, NearDupThreshold)
     try {
-      // seed pairs derive from the index's ONE persisted text pass
-      // (nearDuplicates would re-persist a plan-aliased copy of the
-      // hashed sets — the r19 residency pathology); every cache the seed
-      // derivation takes is released as soon as the seed labels are
-      // checkpointed, so the wave loop runs with exactly ONE corpus-side
-      // cached frame (the index) live
       val seed = graft.operators.JobLabel(s, "c-wave: seed clusters") {
-        val (seedPairs, seedCaches) = MinHashDedup
-          .nearDuplicatesFromIndexWithCaches(staticIndex, NearDupThreshold)
         val sd = ConnectedComponents.withComponents(
           seedPairs.select(col("id_a"), col("id_b")))(_.localCheckpoint())
         seedCaches.foreach(_.unpersist())
@@ -626,6 +626,7 @@ object CorpusOps {
       // the returned frame must not lazily re-read it
       s.createDataFrame(java.util.Arrays.asList(res.collect(): _*), res.schema)
     } finally {
+      seedCaches.foreach(_.unpersist())
       staticIndex.release()
       graft.sources.Sources.deleteRecursively(new java.io.File(root))
     }
@@ -911,40 +912,43 @@ object CorpusOps {
       val sources = docs.select(col("doc_id"), col("source"))
       // seed off the index's one text pass, caches released once the
       // labels are checkpointed (the driveIngestWavesSeeded lifecycle)
+      // and again on every exit path
       val (seedPairs, seedCaches) = MinHashDedup
         .nearDuplicatesFromIndexWithCaches(staticIndex, NearDupThreshold)
-      val seed = ConnectedComponents.withComponents(
-        seedPairs.select(col("id_a"), col("id_b")))(_.localCheckpoint())
-      seedCaches.foreach(_.unpersist())
-      val scores = docs.select(col("doc_id").as("id"), qScoreE6.as("q_e6"))
-      val seedState = StreamOps.repStateOf(seed, scores).localCheckpoint()
-      val idx = graft.operators.IvfSearch.buildIndex(
-        docs.filter(col("doc_id") >= EvalSplit && col("doc_id") < C9CorpusEnd)
-          .select(col("doc_id").as("vec_id"), emb.as("embedding")),
-        "vec_id", "embedding", k = 4, iters = 2, roundDecimals = 6)
       try {
-        val semSeed = t.createDataFrame(
-          t.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          new org.apache.spark.sql.types.StructType()
-            .add("id", org.apache.spark.sql.types.LongType)
-            .add("component", org.apache.spark.sql.types.LongType))
-        val stream = docs
-          .filter(col("doc_id") >= C9CorpusEnd && col("doc_id") < C9StreamEnd)
-          .select(col("doc_id"), col("text"), col("source"), col("lang"),
-            emb.as("embedding"))
-        val cfg = StreamOps.DeployGatesConfig(staticIndex, corpusIds, evalSet,
-          sources, seed, seedState, scores, idx.centroids, idx.assignments,
-          semSeed, "doc_id", "text", "embedding", NearDupThreshold,
-          semThreshold = 0.9, decontamN = 5, bm25Shards = 16,
-          fuzzyShards = 16, frozenLevel = 2,
-          outPath = root.resolve("landed").toString,
-          statePath = root.resolve("state").toString)
-        (0 until C9Batches).foreach { b =>
-          StreamOps.deployGatesBatch(
-            stream.filter(pmod(col("doc_id"), lit(C9Batches.toLong)) === b.toLong),
-            cfg, b.toLong)
-        }
-      } finally { idx.close(); staticIndex.release() }
+        val seed = ConnectedComponents.withComponents(
+          seedPairs.select(col("id_a"), col("id_b")))(_.localCheckpoint())
+        seedCaches.foreach(_.unpersist())
+        val scores = docs.select(col("doc_id").as("id"), qScoreE6.as("q_e6"))
+        val seedState = StreamOps.repStateOf(seed, scores).localCheckpoint()
+        val idx = graft.operators.IvfSearch.buildIndex(
+          docs.filter(col("doc_id") >= EvalSplit && col("doc_id") < C9CorpusEnd)
+            .select(col("doc_id").as("vec_id"), emb.as("embedding")),
+          "vec_id", "embedding", k = 4, iters = 2, roundDecimals = 6)
+        try {
+          val semSeed = t.createDataFrame(
+            t.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            new org.apache.spark.sql.types.StructType()
+              .add("id", org.apache.spark.sql.types.LongType)
+              .add("component", org.apache.spark.sql.types.LongType))
+          val stream = docs
+            .filter(col("doc_id") >= C9CorpusEnd && col("doc_id") < C9StreamEnd)
+            .select(col("doc_id"), col("text"), col("source"), col("lang"),
+              emb.as("embedding"))
+          val cfg = StreamOps.DeployGatesConfig(staticIndex, corpusIds, evalSet,
+            sources, seed, seedState, scores, idx.centroids, idx.assignments,
+            semSeed, "doc_id", "text", "embedding", NearDupThreshold,
+            semThreshold = 0.9, decontamN = 5, bm25Shards = 16,
+            fuzzyShards = 16, frozenLevel = 2,
+            outPath = root.resolve("landed").toString,
+            statePath = root.resolve("state").toString)
+          (0 until C9Batches).foreach { b =>
+            StreamOps.deployGatesBatch(
+              stream.filter(pmod(col("doc_id"), lit(C9Batches.toLong)) === b.toLong),
+              cfg, b.toLong)
+          }
+        } finally idx.close()
+      } finally { seedCaches.foreach(_.unpersist()); staticIndex.release() }
     }
     root.toString
   }

@@ -101,7 +101,16 @@ object VectorOps {
     Tables(s, dir, "embeddings")
       .select(col("label"), posexplode(col("embedding").cast("array<double>")))
       .groupBy(col("label"), col("pos"))
-      .agg(round(avg(col("col")), 6).as("centroid"), count(lit(1)).as("n_vecs"))
+      .agg(roundKeepSign(avg(col("col")), 6).as("centroid"), count(lit(1)).as("n_vecs"))
+
+  /** `round(x, scale)` that keeps the sign of a negative value rounding
+    * to zero. Spark rounds through BigDecimal, which has no negative
+    * zero, so a mean in (−5e−7, 0) rounds to `0.0` at 6 dp; DuckDB's
+    * `ROUND` gives `-0.0`. Every other value is `round`'s own. */
+  private[graft] def roundKeepSign(x: Column, scale: Int): Column = {
+    val r = round(x, scale)
+    when(x < 0 && r === 0.0, lit(-0.0)).otherwise(r)
+  }
 
   /** DuckDB replay of [[centroidAgg]] as a CTE body (label, pos,
     * centroid, n_vecs). */

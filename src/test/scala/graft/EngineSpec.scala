@@ -297,6 +297,86 @@ class EngineSpec extends AnyFunSuite {
     assert(b.contains("China 2018") && b.contains("China 2020"), b)
   }
 
+  // ---- execution shape: one job per question -------------------------
+
+  test("every domain question runs as one Spark job of one stage and one task") {
+    val eng = new ClimateEngine(spark, Map(
+      "noaa" -> noaaLong, "fema" -> Fixtures.fema(spark),
+      "era5" -> Fixtures.era5(spark), "edgar" -> edgarLong))
+    val asks: Seq[(String, () => String, String)] = Seq(
+      ("noaa", () => eng.noaaAnswer("How many droughts occurred in 1980?"),
+        "Q: How many droughts occurred in 1980?\n1"),
+      ("fema-metric", () => eng.femaAnswer("What was the IHP total for Texas hurricanes in 2012?"),
+        "Q: What was the IHP total for Texas hurricanes in 2012?\n$4,200,000.00"),
+      ("fema-list", () => eng.femaAnswer("List tornado incidents in Florida from 2005 to 2010."),
+        "Q: List tornado incidents in Florida from 2005 to 2010.\n" +
+          "year=2007, event=Florida Tornado, state=FL, incident_type=Tornado"),
+      ("era5", () => eng.era5Answer("What was the wind speed in Mumbai in June 2021?"),
+        "Q: What was the wind speed in Mumbai in June 2021?\n" +
+          "Mumbai 2021-06 wind_speed: 5.8 m/s"),
+      ("edgar", () => eng.edgarAnswer("Methane emissions in Brazil from 2015 to 2020."),
+        "Q: Methane emissions in Brazil from 2015 to 2020.\n" +
+          "Brazil 2015: 20554.0 kt\nBrazil 2018: 20783.1 kt\nBrazil 2020: 21002.9 kt"))
+    // the first round also runs the engine's one-time dimension collects
+    asks.foreach { case (_, ask, want) => assert(ask() == want) }
+    val counter = new JobCounter("one-job:")
+    val sc = spark.sparkContext
+    sc.addSparkListener(counter)
+    try {
+      asks.foreach { case (tag, ask, want) =>
+        sc.setJobGroup(s"one-job:$tag", tag)
+        try assert(ask() == want) finally sc.clearJobGroup()
+      }
+      org.apache.spark.ListenerBusDrain.drain(sc)
+    } finally sc.removeSparkListener(counter)
+    asks.foreach { case (tag, _, _) =>
+      val g = s"one-job:$tag"
+      assert(counter.jobs.get(g) == 1, s"$tag jobs")
+      assert(counter.stages.get(g) == 1, s"$tag stages")
+      assert(counter.tasks.get(g) == 1, s"$tag tasks")
+    }
+  }
+
+  test("size rule: a table over the single-partition cutoff keeps its partitioning") {
+    // the rule reads the estimate of the table as the engine is given it:
+    // for parquet that is the bytes of its (compressed) files, not a
+    // row-width estimate
+    val dir = java.nio.file.Files.createTempDirectory("size_rule").toFile
+    try {
+      val path = new java.io.File(dir, "era5")
+      Fixtures.era5(spark).repartition(2).write.parquet(path.getPath)
+      val era5 = spark.read.parquet(path.getPath)
+      val files = path.listFiles().filter(_.getName.endsWith(".parquet"))
+      val est = era5.queryExecution.optimizedPlan.stats.sizeInBytes
+      assert(files.length == 2 && est == BigInt(files.map(_.length).sum))
+      val spec = QuerySpec("era5", where = Seq(Predicate.In("metric", Seq("wind_speed"))),
+        groupBy = Seq("City", "metric"),
+        aggregations = Seq(Aggregation(AggFn.Avg, "value", "value")),
+        orderBy = Seq(Sort("City"), Sort("metric")))
+      // plan-only from here: the physical plan before any execution (AQE
+      // wraps a global sort even when no exchange is planned)
+      def plan(df: org.apache.spark.sql.DataFrame) =
+        SpecCompiler.compile(spec, Map("era5" -> df)).queryExecution.executedPlan match {
+          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+          case p => p
+        }
+
+      val over = ClimateEngine.singlePartitionIfSmall(era5, est.toLong - 1)
+      assert(over eq era5)
+      val overPlan = plan(over)
+      assert(overPlan.toString.contains("Exchange"), overPlan.toString)
+      assert(!overPlan.toString.contains("Coalesce"), overPlan.toString)
+
+      val atPlan = plan(ClimateEngine.singlePartitionIfSmall(era5, est.toLong))
+      assert(!atPlan.toString.contains("Exchange"), atPlan.toString)
+      assert(atPlan.outputPartitioning.numPartitions == 1, atPlan.toString)
+
+      // the engine's own cutoff, by default
+      assert(est <= ClimateEngine.SinglePartitionMaxBytes)
+      assert(!(ClimateEngine.singlePartitionIfSmall(era5) eq era5))
+    } finally graft.sources.Sources.deleteRecursively(dir)
+  }
+
   // ---- ingest round-trips --------------------------------------------
 
   test("noaa unpivot∘pivot = id on the wide fixture") {
@@ -487,4 +567,29 @@ class EngineSpec extends AnyFunSuite {
       assert(res((pla, plo)) == expected, s"point ($pla, $plo)")
     }
   }
+}
+
+/** Jobs, submitted stages and finished tasks per job group, for groups
+  * whose id starts with `prefix`. */
+private class JobCounter(prefix: String) extends org.apache.spark.scheduler.SparkListener {
+  import java.util.concurrent.ConcurrentHashMap
+  import org.apache.spark.scheduler._
+  val jobs = new ConcurrentHashMap[String, Integer]()
+  val stages = new ConcurrentHashMap[String, Integer]()
+  val tasks = new ConcurrentHashMap[String, Integer]()
+  private val stageGroup = new ConcurrentHashMap[Int, String]()
+
+  private def bump(m: ConcurrentHashMap[String, Integer], group: String): Unit =
+    m.merge(group, 1, (a: Integer, b: Integer) => a + b)
+
+  override def onJobStart(js: SparkListenerJobStart): Unit =
+    Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+      .filter(_.startsWith(prefix)).foreach { g =>
+        bump(jobs, g)
+        js.stageIds.foreach(sid => stageGroup.put(sid, g))
+      }
+  override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
+    Option(stageGroup.get(ss.stageInfo.stageId)).foreach(bump(stages, _))
+  override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+    Option(stageGroup.get(te.stageId)).foreach(bump(tasks, _))
 }

@@ -144,4 +144,20 @@ class FunctionsSpec extends AnyFunSuite {
       .collect()(0)
     assert(nanProbe.isNullAt(0), "NaN distances must never produce a winner")
   }
+
+  test("centroid rounding keeps the sign of a negative mean that rounds to zero") {
+    import spark.implicits._
+    // per-key means through the aggregate, the path centroidAgg takes
+    val vals = Seq("neg" -> -4e-7, "pos" -> 4e-7, "ord" -> 0.1234567, "negOrd" -> -0.1234567)
+    val got = vals.toDF("k", "v").groupBy(col("k"))
+      .agg(graft.queries.VectorOps.roundKeepSign(avg(col("v")), 6).as("kept"),
+        round(avg(col("v")), 6).as("plain"))
+      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+    assert(bits(got("neg")._1) == 0x8000000000000000L) // -0.0, as DuckDB's ROUND
+    assert(bits(got("pos")._1) == 0L) // 0.0
+    assert(bits(got("ord")._1) == bits(0.123457))
+    // every value that is not a negative zero stays round's own
+    Seq("pos", "ord", "negOrd").foreach(k => assert(bits(got(k)._1) == bits(got(k)._2), k))
+  }
 }
