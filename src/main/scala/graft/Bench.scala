@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every `SparkEntry.queries` entry against
   * `SPARK_GRAFT_SF_DIR` and emits ONE JSON metric line.
@@ -92,31 +91,15 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Driver-state hygiene (guide §5 — the driver should hold almost
-    // nothing): even with the UI off, the live status stores retain the
-    // last 1000 SQL executions' full plan graphs + metrics and the last
-    // 100k task rows — over a 264-query × multi-rep run that is hundreds
-    // of MB of driver heap (heap histogram mid-bench: 557k SQLPlanMetric
-    // instances), pure GC ballast that competes with 32 running tasks.
-    // Likewise localCheckpoint/broadcast blocks of FINISHED queries are
-    // only freed when a GC notices the dead references — the default
-    // 30min periodic-GC interval is longer than the whole bench, so the
-    // block manager accumulates every query's leftovers (the r19 driver
-    // run's pricing-row blowup signature). None of this changes what any
-    // query computes — it bounds the measurement process's own state so
-    // query N's time does not depend on queries 1..N−1's junk.
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ui.retainedExecutions", "20")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Driver-state hygiene: the status stores are capped in
+    // GraftSession. Likewise localCheckpoint/broadcast blocks of FINISHED
+    // queries are only freed when a GC notices the dead references — the
+    // default 30min periodic-GC interval is longer than the whole bench,
+    // so the block manager accumulates every query's leftovers (the r19
+    // bench run's pricing-row blowup signature). None of this changes
+    // what any query computes — it bounds the measurement process's own
+    // state so query N's time does not depend on queries 1..N−1's junk.
+    val spark = GraftSession.fromEnv()
     // warm-up: JIT/codegen/shuffle/window/join machinery, so the first
     // timed query of each shape isn't charged for one-time JVM costs
     spark.range(2000000).selectExpr("sum(id * 2)", "count(distinct id % 97)").collect()

@@ -18,14 +18,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <sfDir> <outDir> <names>")
     val Array(sfDir, outDir, names) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     Files.createDirectories(Paths.get(outDir))
     val wanted = names.split(",").map(_.trim).filter(_.nonEmpty)
     val qs = SparkEntry.queries

@@ -15,14 +15,7 @@ object QueryDiag {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: QueryDiag <sfDir> <names>")
     val Array(sfDir, names) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     val starts = new ConcurrentHashMap[Int, (Long, String, Seq[Int])]()
     val stages = new ConcurrentHashMap[Int, String]()
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()

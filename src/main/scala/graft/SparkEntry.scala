@@ -2,33 +2,26 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.queries.{CorpusOps, EventOps, HybridOps, PipelineOps, Relational, ScaleOps, SearchOps, TextOps, VectorOps}
+import graft.multimodal.MediaOps
+import graft.queries.{CorpusOps, EventOps, HybridOps, PipelineOps, Query, QueryFamily, Relational, ScaleOps, SearchOps, TextOps, VectorOps}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * `queries` is the full operator inventory (one entry per implemented
-  * operator from SURVEY.md §2); `oracleSql` holds the DuckDB-equivalent SQL
-  * for every query that is SQL-expressible. Aliases and ordering are kept
-  * identical on both sides (the driver's compare sorts columns by name
-  * before hashing values).
+/** The engine's query surface: the flagship `entry`, every registered
+  * query of the ten families (`registry`, with its name → plan view
+  * `queries`), and each query's DuckDB oracle SQL (`oracleSql`).
   */
-object SparkEntry {
+object SparkEntry extends QueryFamily {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.q1Agg(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ EventOps.queries ++ TextOps.queries ++
-      VectorOps.queries ++ ScaleOps.queries ++ CorpusOps.queries ++
-      SearchOps.queries ++ HybridOps.queries ++ PipelineOps.queries ++
-      graft.multimodal.MediaOps.queries
+  /** Every registered query, family by family. */
+  lazy val registry: Seq[Query] =
+    Seq(Relational, EventOps, TextOps, VectorOps, ScaleOps, CorpusOps,
+      SearchOps, HybridOps, PipelineOps, MediaOps).flatMap(_.registry)
 
-  def oracleSql: Map[String, String] =
-    Relational.oracles ++ EventOps.oracles ++ TextOps.oracles ++
-      VectorOps.oracles ++ ScaleOps.oracles ++ CorpusOps.oracles ++
-      SearchOps.oracles ++ HybridOps.oracles ++ PipelineOps.oracles ++
-      graft.multimodal.MediaOps.oracles
+  lazy val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracleSql).toMap
 
   /** Large-SF oracle materialization hints — (setup DDL, served SQL)
     * per query whose oracle shares an expensive CTE chain. Local

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -46,19 +45,7 @@ object Verify {
       }.mkString("{", ",", "}")
       Files.writeString(Paths.get(s"$outDir/oracle_hints.json"), hjson)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // driver-state hygiene over a 264-query run — see Bench.scala
-      .config("spark.sql.ui.retainedExecutions", "20")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     val names = SparkEntry.queries.filter(e => keep(e._1))
     var done = 0
     var failed = 0

@@ -33,11 +33,18 @@ class ClimateEngine(spark: SparkSession, tables: Map[String, DataFrame],
   private def resolve(name: String): DataFrame =
     planned.getOrElse(name, sys.error(s"unregistered table '$name'"))
 
+  /** The predicate a parsed year phrase puts on `column`. */
+  private def yearPredicate(column: String, filter: Parsers.YearFilter): Predicate =
+    filter match {
+      case Parsers.YearEq(y) => Predicate.Eq(column, y)
+      case Parsers.YearRange(a, b) => Predicate.Between(column, a, b)
+      case Parsers.YearCmp(op, y) => Predicate.Cmp(column, op, y)
+    }
+
   /** NOAA: "How many droughts occurred in 1980?" / "What was the total
     * disaster cost in 1983?" — long-form filter + sum. */
   def noaaAnswer(question: String): String = {
     val types = Parsers.noaaDisasterTypes(question)
-    val yearFilter = Parsers.extractYearFilter(question)
     // "economic impact" is the README's phrasing for the cost metric
     // (reference README.md:210 "What was the economic impact of
     // hurricanes in Florida?" — the NOAA table is national, so the state
@@ -47,11 +54,7 @@ class ClimateEngine(spark: SparkSession, tables: Map[String, DataFrame],
     val metricCol = if (wantCost) "cost" else "count"
     val preds = Seq.newBuilder[Predicate]
     if (types.nonEmpty) preds += Predicate.In("disaster_type", types)
-    yearFilter.foreach {
-      case Parsers.YearEq(y) => preds += Predicate.Eq("Year", y)
-      case Parsers.YearRange(a, b) => preds += Predicate.Between("Year", a, b)
-      case Parsers.YearCmp(op, y) => preds += Predicate.Cmp("Year", op, y)
-    }
+    Parsers.extractYearFilter(question).foreach(f => preds += yearPredicate("Year", f))
     val spec = QuerySpec("noaa", where = preds.result(),
       groupBy = if (types.size > 1) Seq("disaster_type") else Nil,
       aggregations = Seq(Aggregation(AggFn.Sum, metricCol, "total")),
@@ -80,11 +83,7 @@ class ClimateEngine(spark: SparkSession, tables: Map[String, DataFrame],
     // the reference's spaCy-DATE + dateparser path
     Parsers.extractYearFilter(question)
       .orElse(Parsers.extractYearNlp(question, today).map(Parsers.YearEq))
-      .foreach {
-        case Parsers.YearEq(y) => preds += Predicate.Eq("year", y)
-        case Parsers.YearRange(a, b) => preds += Predicate.Between("year", a, b)
-        case Parsers.YearCmp(op, y) => preds += Predicate.Cmp("year", op, y)
-      }
+      .foreach(f => preds += yearPredicate("year", f))
     metric.foreach { m =>
       Parsers.extractComparison(question, m).foreach(f =>
         preds += Predicate.Cmp(f.column, f.op, f.value))
@@ -198,13 +197,9 @@ class ClimateEngine(spark: SparkSession, tables: Map[String, DataFrame],
     // year phrases compile to predicates directly (the reference fans out
     // one query per year of an expanded list; a direct predicate keeps
     // boundary phrases like "after 2023" correct — an empty expansion
-    // would wrongly read as "no year filter")
-    Parsers.extractYearFilter(question) match {
-      case Some(Parsers.YearRange(a, b)) => preds += Predicate.Between("year", a, b)
-      case Some(Parsers.YearEq(y)) => preds += Predicate.Eq("year", y)
-      case Some(Parsers.YearCmp(op, y)) => preds += Predicate.Cmp("year", op, y)
-      case None => () // no year phrase → no year filter (all years)
-    }
+    // would wrongly read as "no year filter"); no year phrase → no year
+    // filter (all years)
+    Parsers.extractYearFilter(question).foreach(f => preds += yearPredicate("year", f))
     val spec = QuerySpec("edgar", where = preds.result(),
       groupBy = Seq("Name", "year"),
       aggregations = Seq(Aggregation(AggFn.Sum, "value", "emissions")),

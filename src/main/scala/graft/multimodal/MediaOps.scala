@@ -5,6 +5,8 @@ import java.security.MessageDigest
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.queries.{Query, QueryFamily}
+
 /** Multimodal column plumbing (north-star extension): image/audio/video
   * as opaque `binary` columns with typed metadata, processed in batched
   * per-partition passes — the Scala analog of the mapInPandas pattern
@@ -33,7 +35,7 @@ import org.apache.spark.sql.functions._
   * a pandas-UDF batch). ImageIO's tmp-file disk cache is disabled once
   * per executor JVM — per-row tmp writes would thrash task-local disk.
   */
-object MediaOps {
+object MediaOps extends QueryFamily {
 
   /** Opaque media row: content is the raw bytes, meta carries typed
     * sidecar fields (mime, source). */
@@ -2591,45 +2593,24 @@ object MediaOps {
        |FROM cnt JOIN em USING (component)
        |ORDER BY component""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm1_video_luma" -> (mm1VideoLuma _),
-    "mm2_image_luma" -> (mm2ImageLuma _),
-    "mm3_audio_sum" -> (mm3AudioSum _),
-    "mm4_audio_features" -> (mm4AudioFeatures _),
-    "mm5_image_resize" -> (mm5ImageResize _),
-    "mm6_scene_change" -> (mm6SceneChange _),
-    "mm7_audio_wht" -> (mm7AudioWht _),
-    "mm8_block_motion" -> (mm8BlockMotion _),
-    "mm9_motion_gain" -> (mm9MotionGain _),
-    "mm10_image_neardup" -> (mm10ImageNearDup _),
-    "mm11_audio_neardup" -> (mm11AudioNearDup _),
-    "mm12_image_ann" -> (mm12ImageAnn _),
-    "mm13_multimodal_clusters" -> (mm13MultimodalClusters _),
-    "mm14_image_neardup_at_rest" -> (mm14ImageNeardupAtRest _),
-    "mm15_audio_neardup_at_rest" -> (mm15AudioNeardupAtRest _),
-    "mm16_rolling_image_neardup" -> (mm16RollingImageNeardup _),
-    "mm17_rolling_audio_neardup" -> (mm17RollingAudioNeardup _),
-    "mm18_video_neardup" -> (mm18VideoNearDup _),
-    "mm19_rolling_video_neardup" -> (mm19RollingVideoNeardup _))
-
-  val oracles: Map[String, String] = Map(
-    "mm1_video_luma" -> mm1Sql,
-    "mm2_image_luma" -> mm2Sql,
-    "mm3_audio_sum" -> mm3Sql,
-    "mm4_audio_features" -> mm4Sql,
-    "mm5_image_resize" -> mm5Sql,
-    "mm6_scene_change" -> mm6Sql,
-    "mm7_audio_wht" -> mm7Sql,
-    "mm8_block_motion" -> mm8Sql,
-    "mm9_motion_gain" -> mm9Sql,
-    "mm10_image_neardup" -> mm10Sql,
-    "mm11_audio_neardup" -> mm11Sql,
-    "mm12_image_ann" -> mm12Sql,
-    "mm13_multimodal_clusters" -> mm13Sql,
-    "mm14_image_neardup_at_rest" -> mm14Sql,
-    "mm15_audio_neardup_at_rest" -> mm15Sql,
-    "mm16_rolling_image_neardup" -> mm16Sql,
-    "mm17_rolling_audio_neardup" -> mm17Sql,
-    "mm18_video_neardup" -> mm18Sql,
-    "mm19_rolling_video_neardup" -> mm19Sql)
+  val registry: Seq[Query] = Seq(
+    Query("mm1_video_luma", mm1VideoLuma, mm1Sql),
+    Query("mm2_image_luma", mm2ImageLuma, mm2Sql),
+    Query("mm3_audio_sum", mm3AudioSum, mm3Sql),
+    Query("mm4_audio_features", mm4AudioFeatures, mm4Sql),
+    Query("mm5_image_resize", mm5ImageResize, mm5Sql),
+    Query("mm6_scene_change", mm6SceneChange, mm6Sql),
+    Query("mm7_audio_wht", mm7AudioWht, mm7Sql),
+    Query("mm8_block_motion", mm8BlockMotion, mm8Sql),
+    Query("mm9_motion_gain", mm9MotionGain, mm9Sql),
+    Query("mm10_image_neardup", mm10ImageNearDup, mm10Sql),
+    Query("mm11_audio_neardup", mm11AudioNearDup, mm11Sql),
+    Query("mm12_image_ann", mm12ImageAnn, mm12Sql),
+    Query("mm13_multimodal_clusters", mm13MultimodalClusters, mm13Sql),
+    Query("mm14_image_neardup_at_rest", mm14ImageNeardupAtRest, mm14Sql),
+    Query("mm15_audio_neardup_at_rest", mm15AudioNeardupAtRest, mm15Sql),
+    Query("mm16_rolling_image_neardup", mm16RollingImageNeardup, mm16Sql),
+    Query("mm17_rolling_audio_neardup", mm17RollingAudioNeardup, mm17Sql),
+    Query("mm18_video_neardup", mm18VideoNearDup, mm18Sql),
+    Query("mm19_rolling_video_neardup", mm19RollingVideoNeardup, mm19Sql))
 }

@@ -76,7 +76,7 @@ object BpeTrain {
     // lazy: the nTypes count below is the first action and materializes
     // the checkpoint in the same job — an eager checkpoint would spend a
     // separate job on it
-    var syms = words.select(col("wc"), symbolize(col("w")).as("s"))
+    val syms = words.select(col("wc"), symbolize(col("w")).as("s"))
       .localCheckpoint(false)
     // the k merge rounds run with AQE off and a shuffle width sized to
     // the word-TYPE table the loop actually shuffles (the

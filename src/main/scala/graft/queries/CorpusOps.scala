@@ -20,7 +20,7 @@ import graft.operators.{ConnectedComponents, CorpusShaping, DataChecks, Decontam
   * The c2 oracle replays the hex60 n-gram overlap join (`PortableHash` is
   * engine-portable for the same reason).
   */
-object CorpusOps {
+object CorpusOps extends QueryFamily {
 
   /** Same threshold as m1 (`ScaleOps.m1MinhashNeardup`): c1/d14 cluster
     * exactly the pair set the m1 query reports. */
@@ -2450,85 +2450,46 @@ object CorpusOps {
       |SELECT status, COUNT(*) AS n_docs, MIN(doc_id) AS first_id
       |FROM j GROUP BY status ORDER BY status""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "c1_dedup_clusters" -> (c1DedupClusters _),
-    "g1_pagerank_neardup" -> (g1PagerankNeardup _),
-    "g2_rolling_pagerank" -> (g2RollingPagerank _),
-    "g3_personalized_pagerank" -> (g3PersonalizedPagerank _),
-    "g4_weighted_pagerank" -> (g4WeightedPagerank _),
-    "c2_decontaminate" -> (c2Decontaminate _),
-    "c23_decontaminate_served" -> (c23DecontaminateServed _),
-    "c6_split_leakage" -> (c6SplitLeakage _),
-    "c7_source_overlap" -> (c7SourceOverlap _),
-    "c8_threshold_sweep" -> (c8ThresholdSweep _),
-    "c9_ingest_compaction" -> (c9IngestCompaction _),
-    "c12_ingest_at_rest" -> (c12IngestAtRest _),
-    "c13_incremental_cc" -> (c13IncrementalCc _),
-    "c14_rolling_cc" -> (c14RollingCc _),
-    "c15_cluster_purity" -> (c15ClusterPurity _),
-    "c16_best_representative" -> (c16BestRepresentative _),
-    "c17_rolling_rep" -> (c17RollingRep _),
-    "c18_deploy_gates" -> (c18DeployGates _),
-    "c19_asof_corpus" -> (c19AsofCorpus _),
-    "c22_corpus_changelog" -> (c22CorpusChangelog _),
-    "c20_asof_clusters" -> (c20AsofClusters _),
-    "c21_asof_reps" -> (c21AsofReps _),
-    "c10_source_dup_factor" -> (c10SourceDupFactor _),
-    "c11_label_prop" -> (c11LabelProp _),
-    "d35_source_scorecard" -> (d35SourceScorecard _),
-    "c3_clean_decontaminated" -> (c3CleanDecontaminated _),
-    "c4_triangles" -> (c4Triangles _),
-    "c5_pagerank" -> (c5Pagerank _),
-    "d28_pps_sample" -> (d28PpsSample _),
-    "d14_neardup_drop" -> (d14NeardupDrop _),
-    "d15_stratified_sample" -> (d15StratifiedSample _),
-    "d16_token_chunks" -> (d16TokenChunks _),
-    "d17_chunk_dedup" -> (d17ChunkDedup _),
-    "d18_seq_pack" -> (d18SeqPack _),
-    "d19_lang_cap" -> (d19LangCap _),
-    "d20_token_mix" -> (d20TokenMix _),
-    "d21_data_checks" -> (d21DataChecks _),
-    "d22_snapshot_diff" -> (d22SnapshotDiff _))
-
-  val oracles: Map[String, String] = Map(
-    "c1_dedup_clusters" -> c1Sql,
-    "g1_pagerank_neardup" -> g1Sql,
-    "g2_rolling_pagerank" -> g2Sql,
-    "g3_personalized_pagerank" -> g3Sql,
-    "g4_weighted_pagerank" -> g4Sql,
-    "c2_decontaminate" -> c2Sql,
+  val registry: Seq[Query] = Seq(
+    Query("c1_dedup_clusters", c1DedupClusters, c1Sql),
+    Query("g1_pagerank_neardup", g1PagerankNeardup, g1Sql),
+    Query("g2_rolling_pagerank", g2RollingPagerank, g2Sql),
+    Query("g3_personalized_pagerank", g3PersonalizedPagerank, g3Sql),
+    Query("g4_weighted_pagerank", g4WeightedPagerank, g4Sql),
+    Query("c2_decontaminate", c2Decontaminate, c2Sql),
     // the at-rest index serve must reproduce c2's sweep exactly
-    "c23_decontaminate_served" -> c2Sql,
-    "c6_split_leakage" -> c6Sql,
-    "c7_source_overlap" -> c7Sql,
-    "c8_threshold_sweep" -> c8Sql,
-    "c9_ingest_compaction" -> c9Sql,
+    Query("c23_decontaminate_served", c23DecontaminateServed, c2Sql),
+    Query("c6_split_leakage", c6SplitLeakage, c6Sql),
+    Query("c7_source_overlap", c7SourceOverlap, c7Sql),
+    Query("c8_threshold_sweep", c8ThresholdSweep, c8Sql),
+    Query("c9_ingest_compaction", c9IngestCompaction, c9Sql),
     // the at-rest round-trip must reproduce c9's one-shot answer exactly
-    "c12_ingest_at_rest" -> c9Sql,
-    "c13_incremental_cc" -> c1Sql, // the star identity: same answer, incremental machine
-    "c14_rolling_cc" -> c14Sql,
-    "c15_cluster_purity" -> c15Sql,
-    "c16_best_representative" -> c16Sql,
-    "c17_rolling_rep" -> c17Sql,
-    "c18_deploy_gates" -> c18Sql,
-    "c19_asof_corpus" -> c19Sql,
-    "c22_corpus_changelog" -> c22Sql,
-    "c20_asof_clusters" -> c20Sql,
-    "c21_asof_reps" -> c21Sql,
-    "c10_source_dup_factor" -> c10Sql,
-    "c11_label_prop" -> c11Sql,
-    "d35_source_scorecard" -> d35Sql,
-    "c3_clean_decontaminated" -> c3Sql,
-    "c4_triangles" -> c4Sql,
-    "c5_pagerank" -> c5Sql,
-    "d28_pps_sample" -> d28Sql,
-    "d14_neardup_drop" -> d14Sql,
-    "d15_stratified_sample" -> d15Sql,
-    "d16_token_chunks" -> d16Sql,
-    "d17_chunk_dedup" -> d17Sql,
-    "d18_seq_pack" -> d18Sql,
-    "d19_lang_cap" -> d19Sql,
-    "d20_token_mix" -> d20Sql,
-    "d21_data_checks" -> d21Sql,
-    "d22_snapshot_diff" -> d22Sql)
+    Query("c12_ingest_at_rest", c12IngestAtRest, c9Sql),
+    // the star identity: same answer, incremental machine
+    Query("c13_incremental_cc", c13IncrementalCc, c1Sql),
+    Query("c14_rolling_cc", c14RollingCc, c14Sql),
+    Query("c15_cluster_purity", c15ClusterPurity, c15Sql),
+    Query("c16_best_representative", c16BestRepresentative, c16Sql),
+    Query("c17_rolling_rep", c17RollingRep, c17Sql),
+    Query("c18_deploy_gates", c18DeployGates, c18Sql),
+    Query("c19_asof_corpus", c19AsofCorpus, c19Sql),
+    Query("c22_corpus_changelog", c22CorpusChangelog, c22Sql),
+    Query("c20_asof_clusters", c20AsofClusters, c20Sql),
+    Query("c21_asof_reps", c21AsofReps, c21Sql),
+    Query("c10_source_dup_factor", c10SourceDupFactor, c10Sql),
+    Query("c11_label_prop", c11LabelProp, c11Sql),
+    Query("d35_source_scorecard", d35SourceScorecard, d35Sql),
+    Query("c3_clean_decontaminated", c3CleanDecontaminated, c3Sql),
+    Query("c4_triangles", c4Triangles, c4Sql),
+    Query("c5_pagerank", c5Pagerank, c5Sql),
+    Query("d28_pps_sample", d28PpsSample, d28Sql),
+    Query("d14_neardup_drop", d14NeardupDrop, d14Sql),
+    Query("d15_stratified_sample", d15StratifiedSample, d15Sql),
+    Query("d16_token_chunks", d16TokenChunks, d16Sql),
+    Query("d17_chunk_dedup", d17ChunkDedup, d17Sql),
+    Query("d18_seq_pack", d18SeqPack, d18Sql),
+    Query("d19_lang_cap", d19LangCap, d19Sql),
+    Query("d20_token_mix", d20TokenMix, d20Sql),
+    Query("d21_data_checks", d21DataChecks, d21Sql),
+    Query("d22_snapshot_diff", d22SnapshotDiff, d22Sql))
 }

@@ -16,7 +16,7 @@ import graft.Tables
   * `epoch_us`) and leave the engine as formatted strings, so results are
   * representation-stable across engines.
   */
-object EventOps {
+object EventOps extends QueryFamily {
 
   private def decSum(c: org.apache.spark.sql.Column, name: String): org.apache.spark.sql.Column =
     Conventions.decSum(c, name)
@@ -1777,89 +1777,46 @@ object EventOps {
        |FROM j""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "e35_kmv_users" -> (e35KmvUsers _),
-    "e38_ab_splitcheck" -> (e38AbSplitCheck _),
-    "e36_windowed_kmv" -> (e36WindowedKmv _),
-    "e37_churn_hazard" -> (e37ChurnHazard _),
-    "e1_window_hourly" -> (e1WindowHourly _),
-    "e2_window_sliding" -> (e2WindowSliding _),
-    "e3_sessionize" -> (e3Sessionize _),
-    "e4_json_extract" -> (e4JsonExtract _),
-    "e5_type_stats" -> (e5TypeStats _),
-    "e6_dedup_first" -> (e6DedupFirst _),
-    "e7_interval_join" -> (e7IntervalJoin _),
-    "e8_asof_join" -> (e8AsofJoin _),
-    "e9_asof_forward" -> (e9AsofForward _),
-    "e10_asof_nearest" -> (e10AsofNearest _),
-    "e11_value_hist" -> (e11ValueHist _),
-    "e12_gap_fill" -> (e12GapFill _),
-    "e13_rolling_range" -> (e13RollingRange _),
-    "e14_funnel" -> (e14Funnel _),
-    "e15_retention" -> (e15Retention _),
-    "e16_outliers" -> (e16Outliers _),
-    "e17_scd2_intervals" -> (e17Scd2 _),
-    "e18_twap" -> (e18Twap _),
-    "e19_trend_slope" -> (e19TrendSlope _),
-    "e20_mad_outliers" -> (e20MadOutliers _),
-    "e21_cusum_change" -> (e21CusumChange _),
-    "e22_transitions" -> (e22Transitions _),
-    "e23_seasonal_anom" -> (e23SeasonalAnom _),
-    "e24_simpson_diversity" -> (e24SimpsonDiversity _),
-    "e25_cooccurrence_lift" -> (e25CooccurrenceLift _),
-    "e26_streaks" -> (e26Streaks _),
-    "e27_convert_time" -> (e27ConvertTime _),
-    "e28_target_encode" -> (e28TargetEncode _),
-    "e29_wow_growth" -> (e29WowGrowth _),
-    "e30_inter_arrival" -> (e30InterArrival _),
-    "e31_funnel" -> (e31Funnel _),
-    "e32_heavy_hitters" -> (e32HeavyHitters _),
-    "e33_ohlc" -> (e33Ohlc _),
-    "e34_incremental_agg" -> (e34IncrementalAgg _),
-    "r1_range_join" -> (r1RangeJoin _),
-    "r2_band_join" -> (r2BandJoin _),
-    "z1_zorder_stats" -> (z1ZorderStats _))
-
-  val oracles: Map[String, String] = Map(
-    "e35_kmv_users" -> e35Sql,
-    "e38_ab_splitcheck" -> e38Sql,
-    "e36_windowed_kmv" -> e36Sql,
-    "e37_churn_hazard" -> e37Sql,
-    "e1_window_hourly" -> e1Sql,
-    "e2_window_sliding" -> e2Sql,
-    "e3_sessionize" -> e3Sql,
-    "e4_json_extract" -> e4Sql,
-    "e5_type_stats" -> e5Sql,
-    "e6_dedup_first" -> e6Sql,
-    "e7_interval_join" -> e7Sql,
-    "e8_asof_join" -> e8Sql,
-    "e9_asof_forward" -> e9Sql,
-    "e10_asof_nearest" -> e10Sql,
-    "e11_value_hist" -> e11Sql,
-    "e12_gap_fill" -> e12Sql,
-    "e13_rolling_range" -> e13Sql,
-    "e14_funnel" -> e14Sql,
-    "e15_retention" -> e15Sql,
-    "e16_outliers" -> e16Sql,
-    "e17_scd2_intervals" -> e17Sql,
-    "e18_twap" -> e18Sql,
-    "e19_trend_slope" -> e19Sql,
-    "e20_mad_outliers" -> e20Sql,
-    "e21_cusum_change" -> e21Sql,
-    "e22_transitions" -> e22Sql,
-    "e23_seasonal_anom" -> e23Sql,
-    "e24_simpson_diversity" -> e24Sql,
-    "e25_cooccurrence_lift" -> e25Sql,
-    "e26_streaks" -> e26Sql,
-    "e27_convert_time" -> e27Sql,
-    "e28_target_encode" -> e28Sql,
-    "e29_wow_growth" -> e29Sql,
-    "e30_inter_arrival" -> e30Sql,
-    "e31_funnel" -> e31Sql,
-    "e32_heavy_hitters" -> e32Sql,
-    "e33_ohlc" -> e33Sql,
-    "e34_incremental_agg" -> e34Sql,
-    "r1_range_join" -> r1Sql,
-    "r2_band_join" -> r2Sql,
-    "z1_zorder_stats" -> z1Sql)
+  val registry: Seq[Query] = Seq(
+    Query("e35_kmv_users", e35KmvUsers, e35Sql),
+    Query("e38_ab_splitcheck", e38AbSplitCheck, e38Sql),
+    Query("e36_windowed_kmv", e36WindowedKmv, e36Sql),
+    Query("e37_churn_hazard", e37ChurnHazard, e37Sql),
+    Query("e1_window_hourly", e1WindowHourly, e1Sql),
+    Query("e2_window_sliding", e2WindowSliding, e2Sql),
+    Query("e3_sessionize", e3Sessionize, e3Sql),
+    Query("e4_json_extract", e4JsonExtract, e4Sql),
+    Query("e5_type_stats", e5TypeStats, e5Sql),
+    Query("e6_dedup_first", e6DedupFirst, e6Sql),
+    Query("e7_interval_join", e7IntervalJoin, e7Sql),
+    Query("e8_asof_join", e8AsofJoin, e8Sql),
+    Query("e9_asof_forward", e9AsofForward, e9Sql),
+    Query("e10_asof_nearest", e10AsofNearest, e10Sql),
+    Query("e11_value_hist", e11ValueHist, e11Sql),
+    Query("e12_gap_fill", e12GapFill, e12Sql),
+    Query("e13_rolling_range", e13RollingRange, e13Sql),
+    Query("e14_funnel", e14Funnel, e14Sql),
+    Query("e15_retention", e15Retention, e15Sql),
+    Query("e16_outliers", e16Outliers, e16Sql),
+    Query("e17_scd2_intervals", e17Scd2, e17Sql),
+    Query("e18_twap", e18Twap, e18Sql),
+    Query("e19_trend_slope", e19TrendSlope, e19Sql),
+    Query("e20_mad_outliers", e20MadOutliers, e20Sql),
+    Query("e21_cusum_change", e21CusumChange, e21Sql),
+    Query("e22_transitions", e22Transitions, e22Sql),
+    Query("e23_seasonal_anom", e23SeasonalAnom, e23Sql),
+    Query("e24_simpson_diversity", e24SimpsonDiversity, e24Sql),
+    Query("e25_cooccurrence_lift", e25CooccurrenceLift, e25Sql),
+    Query("e26_streaks", e26Streaks, e26Sql),
+    Query("e27_convert_time", e27ConvertTime, e27Sql),
+    Query("e28_target_encode", e28TargetEncode, e28Sql),
+    Query("e29_wow_growth", e29WowGrowth, e29Sql),
+    Query("e30_inter_arrival", e30InterArrival, e30Sql),
+    Query("e31_funnel", e31Funnel, e31Sql),
+    Query("e32_heavy_hitters", e32HeavyHitters, e32Sql),
+    Query("e33_ohlc", e33Ohlc, e33Sql),
+    Query("e34_incremental_agg", e34IncrementalAgg, e34Sql),
+    Query("r1_range_join", r1RangeJoin, r1Sql),
+    Query("r2_band_join", r2BandJoin, r2Sql),
+    Query("z1_zorder_stats", z1ZorderStats, z1Sql))
 }

@@ -25,7 +25,7 @@ import graft.operators.KeywordSearch
   * WindowExec is bounded at legN rows by construction; the fusion joins
   * two ≤legN-row frames. At 100 TB only the leg scans grow.
   */
-object HybridOps {
+object HybridOps extends QueryFamily {
 
   /** Same df spectrum as k1: one rare term (idf-dominated) + two common
     * ones (tf/length-dominated), so the keyword leg exercises the whole
@@ -910,33 +910,19 @@ object HybridOps {
        |SELECT doc_id, rb, cos, rk FROM ranked
        |WHERE rk <= $HTopK ORDER BY rk""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "h1_hybrid_rrf" -> (h1HybridRrf _),
-    "h2_rolling_hybrid" -> (h2RollingHybrid _),
-    "h3_ivf_hybrid" -> (h3IvfHybrid _),
-    "h4_asof_hybrid" -> (h4AsofHybrid _),
-    "h5_tri_rrf" -> (h5TriRrf _),
-    "h6_filtered_hybrid" -> (h6FilteredHybrid _),
-    "h7_filtered_ivf_hybrid" -> (h7FilteredIvfHybrid _),
-    "h8_diversified_hybrid" -> (h8DiversifiedHybrid _),
-    "h9_fusion_ablation" -> (h9FusionAblation _),
-    "h10_boolean_hybrid" -> (h10BooleanHybrid _),
-    "h11_crossmodal_hybrid" -> (h11CrossModalHybrid _),
-    "h12_cascade_rerank" -> (h12CascadeRerank _))
-
-  val oracles: Map[String, String] = Map(
-    "h1_hybrid_rrf" -> h1Sql,
+  val registry: Seq[Query] = Seq(
+    Query("h1_hybrid_rrf", h1HybridRrf, h1Sql),
     // same answer: the rolling-served keyword leg is bit-identical to
     // the corpus scan after the stale version is superseded
-    "h2_rolling_hybrid" -> h1Sql,
-    "h3_ivf_hybrid" -> h3Sql,
-    "h4_asof_hybrid" -> h4Sql,
-    "h5_tri_rrf" -> h5Sql,
-    "h6_filtered_hybrid" -> h6Sql,
-    "h7_filtered_ivf_hybrid" -> h7Sql,
-    "h8_diversified_hybrid" -> h8Sql,
-    "h9_fusion_ablation" -> h9Sql,
-    "h10_boolean_hybrid" -> h10Sql,
-    "h11_crossmodal_hybrid" -> h11Sql,
-    "h12_cascade_rerank" -> h12Sql)
+    Query("h2_rolling_hybrid", h2RollingHybrid, h1Sql),
+    Query("h3_ivf_hybrid", h3IvfHybrid, h3Sql),
+    Query("h4_asof_hybrid", h4AsofHybrid, h4Sql),
+    Query("h5_tri_rrf", h5TriRrf, h5Sql),
+    Query("h6_filtered_hybrid", h6FilteredHybrid, h6Sql),
+    Query("h7_filtered_ivf_hybrid", h7FilteredIvfHybrid, h7Sql),
+    Query("h8_diversified_hybrid", h8DiversifiedHybrid, h8Sql),
+    Query("h9_fusion_ablation", h9FusionAblation, h9Sql),
+    Query("h10_boolean_hybrid", h10BooleanHybrid, h10Sql),
+    Query("h11_crossmodal_hybrid", h11CrossModalHybrid, h11Sql),
+    Query("h12_cascade_rerank", h12CascadeRerank, h12Sql))
 }

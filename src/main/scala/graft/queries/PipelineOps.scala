@@ -27,7 +27,7 @@ import graft.operators.MinHashDedup
   * `Optimized-Climate-Data-Integration`'s cleaning notebooks run these
   * stages as separate passes — the funnel is the single-plan form.
   */
-object PipelineOps {
+object PipelineOps extends QueryFamily {
 
   /** Stage order: 1 exact dedup, 2 MinHash near-dedup, 3 benchmark
     * decontamination, 4 quality floor. First drop wins attribution. */
@@ -521,19 +521,11 @@ object PipelineOps {
       "pipe6_pack_curriculum" -> (setup, served(pipe6Tail)))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipe1_training_funnel" -> (pipe1TrainingFunnel _),
-    "pipe2_funnel_by_lang" -> (pipe2FunnelByLang _),
-    "pipe3_funnel_packing" -> (pipe3FunnelPacking _),
-    "pipe4_span_funnel" -> (pipe4SpanFunnel _),
-    "pipe5_curriculum" -> (pipe5Curriculum _),
-    "pipe6_pack_curriculum" -> (pipe6PackCurriculum _))
-
-  val oracles: Map[String, String] = Map(
-    "pipe1_training_funnel" -> pipe1Sql,
-    "pipe2_funnel_by_lang" -> pipe2Sql,
-    "pipe3_funnel_packing" -> pipe3Sql,
-    "pipe4_span_funnel" -> pipe4Sql,
-    "pipe5_curriculum" -> pipe5Sql,
-    "pipe6_pack_curriculum" -> pipe6Sql)
+  val registry: Seq[Query] = Seq(
+    Query("pipe1_training_funnel", pipe1TrainingFunnel, pipe1Sql),
+    Query("pipe2_funnel_by_lang", pipe2FunnelByLang, pipe2Sql),
+    Query("pipe3_funnel_packing", pipe3FunnelPacking, pipe3Sql),
+    Query("pipe4_span_funnel", pipe4SpanFunnel, pipe4Sql),
+    Query("pipe5_curriculum", pipe5Curriculum, pipe5Sql),
+    Query("pipe6_pack_curriculum", pipe6PackCurriculum, pipe6Sql))
 }

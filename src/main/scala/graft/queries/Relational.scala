@@ -22,7 +22,7 @@ import graft.Tables
   * fixed-cardinality dims, TakeOrderedAndProject for top-n, no driver-side
   * loops).
   */
-object Relational {
+object Relational extends QueryFamily {
 
   private def decSum(c: Column, name: String): Column = Conventions.decSum(c, name)
 
@@ -1186,86 +1186,45 @@ object Relational {
       |FROM ranked WHERE rk = 1
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "geo1_reverse_geocode" -> (geo1ReverseGeocode _),
-    "geo1s_reverse_geocode_served" -> (geo1sReverseGeocodeServed _),
-    "q32_column_stats" -> (q32ColumnStats _),
-    "q30_benford" -> (q30Benford _),
-    "q31_sorted_blocking" -> (q31SortedBlocking _),
-    "q29_correlation" -> (q29Correlation _),
-    "q28_conditional_agg" -> (q28ConditionalAgg _),
-    "q1_agg" -> (q1Agg _),
-    "q2_topn" -> (q2TopN _),
-    "q3_join_agg" -> (q3JoinAgg _),
-    "q4_semi_join" -> (q4SemiJoin _),
-    "q5_anti_join" -> (q5AntiJoin _),
-    "q6_scalar_agg" -> (q6ScalarAgg _),
-    "q7_distinct" -> (q7Distinct _),
-    "q8_dedup_group" -> (q8DedupGroup _),
-    "q9_window_topk" -> (q9WindowTopK _),
-    "q10_window_lag" -> (q10WindowLag _),
-    "q11_union" -> (q11Union _),
-    "q12_intersect" -> (q12Intersect _),
-    "q13_except" -> (q13Except _),
-    "q14_pivot" -> (q14Pivot _),
-    "q15_unpivot" -> (q15Unpivot _),
-    "q16_rollup" -> (q16Rollup _),
-    "q17_strings" -> (q17Strings _),
-    "q18_dates" -> (q18Dates _),
-    "q19_fuzzy_match" -> (q19FuzzyMatch _),
-    "q20_null_profile" -> (q20NullProfile _),
-    "q21_cross_fanout" -> (q21CrossFanout _),
-    "q22_cube" -> (q22Cube _),
-    "q23_correlated_sub" -> (q23CorrelatedSub _),
-    "q24_percentiles" -> (q24Percentiles _),
-    "q25_fact_join" -> (q25FactJoin _),
-    "q26_grouping_sets" -> (q26GroupingSets _),
-    "q27_rank_family" -> (q27RankFamily _),
-    "q33_value_windows" -> (q33ValueWindows _),
-    "q34_recursive_cte" -> (q34RecursiveCte _),
-    "q35_topk_agg" -> (q35TopkAgg _),
-    "q36_lateral" -> (q36Lateral _),
-    "q37_bag_setops" -> (q37BagSetops _))
-
-  val oracles: Map[String, String] = Map(
-    "geo1_reverse_geocode" -> geo1Sql,
+  val registry: Seq[Query] = Seq(
+    Query("geo1_reverse_geocode", geo1ReverseGeocode, geo1Sql),
     // the at-rest ring-table serve must reproduce geo1 exactly
-    "geo1s_reverse_geocode_served" -> geo1Sql,
-    "q32_column_stats" -> q32Sql,
-    "q30_benford" -> q30Sql,
-    "q31_sorted_blocking" -> q31Sql,
-    "q29_correlation" -> q29Sql,
-    "q28_conditional_agg" -> q28Sql,
-    "q1_agg" -> q1Sql,
-    "q2_topn" -> q2Sql,
-    "q3_join_agg" -> q3Sql,
-    "q4_semi_join" -> q4Sql,
-    "q5_anti_join" -> q5Sql,
-    "q6_scalar_agg" -> q6Sql,
-    "q7_distinct" -> q7Sql,
-    "q8_dedup_group" -> q8Sql,
-    "q9_window_topk" -> q9Sql,
-    "q10_window_lag" -> q10Sql,
-    "q11_union" -> q11Sql,
-    "q12_intersect" -> q12Sql,
-    "q13_except" -> q13Sql,
-    "q14_pivot" -> q14Sql,
-    "q15_unpivot" -> q15Sql,
-    "q16_rollup" -> q16Sql,
-    "q17_strings" -> q17Sql,
-    "q18_dates" -> q18Sql,
-    "q19_fuzzy_match" -> q19Sql,
-    "q20_null_profile" -> q20Sql,
-    "q21_cross_fanout" -> q21Sql,
-    "q22_cube" -> q22Sql,
-    "q23_correlated_sub" -> q23Sql,
-    "q24_percentiles" -> q24Sql,
-    "q25_fact_join" -> q25Sql,
-    "q26_grouping_sets" -> q26Sql,
-    "q27_rank_family" -> q27Sql,
-    "q33_value_windows" -> q33Sql,
-    "q34_recursive_cte" -> q34Sql,
-    "q35_topk_agg" -> q9Sql, // same answer as q9, via the bounded-heap aggregate
-    "q36_lateral" -> q36Sql,
-    "q37_bag_setops" -> q37Sql)
+    Query("geo1s_reverse_geocode_served", geo1sReverseGeocodeServed, geo1Sql),
+    Query("q32_column_stats", q32ColumnStats, q32Sql),
+    Query("q30_benford", q30Benford, q30Sql),
+    Query("q31_sorted_blocking", q31SortedBlocking, q31Sql),
+    Query("q29_correlation", q29Correlation, q29Sql),
+    Query("q28_conditional_agg", q28ConditionalAgg, q28Sql),
+    Query("q1_agg", q1Agg, q1Sql),
+    Query("q2_topn", q2TopN, q2Sql),
+    Query("q3_join_agg", q3JoinAgg, q3Sql),
+    Query("q4_semi_join", q4SemiJoin, q4Sql),
+    Query("q5_anti_join", q5AntiJoin, q5Sql),
+    Query("q6_scalar_agg", q6ScalarAgg, q6Sql),
+    Query("q7_distinct", q7Distinct, q7Sql),
+    Query("q8_dedup_group", q8DedupGroup, q8Sql),
+    Query("q9_window_topk", q9WindowTopK, q9Sql),
+    Query("q10_window_lag", q10WindowLag, q10Sql),
+    Query("q11_union", q11Union, q11Sql),
+    Query("q12_intersect", q12Intersect, q12Sql),
+    Query("q13_except", q13Except, q13Sql),
+    Query("q14_pivot", q14Pivot, q14Sql),
+    Query("q15_unpivot", q15Unpivot, q15Sql),
+    Query("q16_rollup", q16Rollup, q16Sql),
+    Query("q17_strings", q17Strings, q17Sql),
+    Query("q18_dates", q18Dates, q18Sql),
+    Query("q19_fuzzy_match", q19FuzzyMatch, q19Sql),
+    Query("q20_null_profile", q20NullProfile, q20Sql),
+    Query("q21_cross_fanout", q21CrossFanout, q21Sql),
+    Query("q22_cube", q22Cube, q22Sql),
+    Query("q23_correlated_sub", q23CorrelatedSub, q23Sql),
+    Query("q24_percentiles", q24Percentiles, q24Sql),
+    Query("q25_fact_join", q25FactJoin, q25Sql),
+    Query("q26_grouping_sets", q26GroupingSets, q26Sql),
+    Query("q27_rank_family", q27RankFamily, q27Sql),
+    Query("q33_value_windows", q33ValueWindows, q33Sql),
+    Query("q34_recursive_cte", q34RecursiveCte, q34Sql),
+    Query("q35_topk_agg", q35TopkAgg, q9Sql), // same answer as q9, via the bounded-heap aggregate
+    Query("q36_lateral", q36Lateral, q36Sql),
+    Query("q37_bag_setops", q37BagSetops, q37Sql))
 }

@@ -13,7 +13,7 @@ import graft.operators.{AnnSearch, BloomPrune, IvfSearch, MinHashDedup, Portable
   * seeds), so the approximation algorithms themselves are hash-verified —
   * not just smoke-tested.
   */
-object ScaleOps {
+object ScaleOps extends QueryFamily {
 
   /** m1: MinHash+LSH near-dup candidates verified with exact Jaccard
     * (threshold 0.3 keeps the result non-trivial on synthetic data). */
@@ -2548,79 +2548,42 @@ object ScaleOps {
       | quantile_cont(l_quantity, 0.9) AS p90
       |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "m1_minhash_neardup" -> (m1MinhashNeardup _),
-    "m2_simhash_neardup" -> (m2SimhashNeardup _),
-    "m3_sketch_calibration" -> (m3SketchCalibration _),
-    "m4_kmv_distinct" -> (m4KmvDistinct _),
-    "m5_kmv_overlap" -> (m5KmvOverlap _),
-    "m6_cms_heavy" -> (m6CmsHeavy _),
-    "a1_ann_topk" -> (a1AnnTopk _),
-    "a2_embedding_neardup" -> (a2EmbeddingNeardup _),
-    "a4_semdedup" -> (a4SemDedup _),
-    "a8_semdedup_at_rest" -> (a8SemDedupAtRest _),
-    "a9_semdedup_verdicts_at_rest" -> (a9SemDedupVerdictsAtRest _),
-    "a7_semantic_decontam" -> (a7SemanticDecontam _),
-    "a5_rolling_semdedup" -> (a5RollingSemDedup _),
-    "a6_asof_semdedup" -> (a6AsofSemDedup _),
-    "i1_ivf_topk" -> (i1IvfTopk _),
-    "i12_ivf_bq_rerank" -> (i12IvfBqRerank _),
-    "i2_pq_topk" -> (i2PqTopk _),
-    "i3_ivf_pq_rerank" -> (i3IvfPqRerank _),
-    "i4_pq_distortion" -> (i4PqDistortion _),
-    "i5_ann_at_rest" -> (i5AnnAtRest _),
-    "i6_ivf_recall" -> (i6IvfRecall _),
-    "i7_filtered_ann" -> (i7FilteredAnn _),
-    "i8_incremental_ivf" -> (i8IncrementalIvf _),
-    "i9_grown_recall" -> (i9GrownRecall _),
-    "i10_retrain_loop" -> (i10RetrainLoop _),
-    "i10b_retrain_at_rest" -> (i10RetrainAtRest _),
-    "i11_asof_ann" -> (i11AsofAnn _),
-    "i13_ann_deletes" -> (i13AnnDeletes _),
-    "s1_skew_agg" -> (s1SkewAgg _),
-    "s2_skew_join" -> (s2SkewJoin _),
-    "s3_adaptive_skew_join" -> (s3AdaptiveSkewJoin _),
-    "s4_bucketed_join" -> (s4BucketedJoin _),
-    "b1_bloom_join" -> (b1BloomJoin _),
-    "b2_bloom_anti_join" -> (b2BloomAntiJoin _),
-    "p2_percentile_dist" -> (p2PercentileDist _))
-
-  val oracles: Map[String, String] = Map(
-    "m1_minhash_neardup" -> m1Sql,
-    "m2_simhash_neardup" -> m2Sql,
-    "m3_sketch_calibration" -> m3Sql,
-    "m4_kmv_distinct" -> m4Sql,
-    "m5_kmv_overlap" -> m5Sql,
-    "m6_cms_heavy" -> m6Sql,
-    "a1_ann_topk" -> a1Sql,
-    "a2_embedding_neardup" -> a2Sql,
-    "a4_semdedup" -> a4Sql,
+  val registry: Seq[Query] = Seq(
+    Query("m1_minhash_neardup", m1MinhashNeardup, m1Sql),
+    Query("m2_simhash_neardup", m2SimhashNeardup, m2Sql),
+    Query("m3_sketch_calibration", m3SketchCalibration, m3Sql),
+    Query("m4_kmv_distinct", m4KmvDistinct, m4Sql),
+    Query("m5_kmv_overlap", m5KmvOverlap, m5Sql),
+    Query("m6_cms_heavy", m6CmsHeavy, m6Sql),
+    Query("a1_ann_topk", a1AnnTopk, a1Sql),
+    Query("a2_embedding_neardup", a2EmbeddingNeardup, a2Sql),
+    Query("a4_semdedup", a4SemDedup, a4Sql),
     // the at-rest index serve must reproduce a4's sweep exactly
-    "a8_semdedup_at_rest" -> a4Sql,
-    "a9_semdedup_verdicts_at_rest" -> a4Sql,
-    "a7_semantic_decontam" -> a7Sql,
-    "a5_rolling_semdedup" -> a5Sql,
-    "a6_asof_semdedup" -> a6Sql,
-    "i1_ivf_topk" -> i1Sql,
-    "i12_ivf_bq_rerank" -> i12Sql,
-    "i2_pq_topk" -> i2Sql,
-    "i3_ivf_pq_rerank" -> i3Sql,
-    "i4_pq_distortion" -> i4Sql,
-    "i5_ann_at_rest" -> i3Sql, // same answer, served from artifacts
-    "i6_ivf_recall" -> i6Sql,
-    "i7_filtered_ann" -> i7Sql,
-    "i8_incremental_ivf" -> i8Sql,
-    "i9_grown_recall" -> i9Sql,
-    "i10_retrain_loop" -> i10Sql,
-    "i11_asof_ann" -> i11Sql,
-    "i13_ann_deletes" -> i13Sql,
+    Query("a8_semdedup_at_rest", a8SemDedupAtRest, a4Sql),
+    Query("a9_semdedup_verdicts_at_rest", a9SemDedupVerdictsAtRest, a4Sql),
+    Query("a7_semantic_decontam", a7SemanticDecontam, a7Sql),
+    Query("a5_rolling_semdedup", a5RollingSemDedup, a5Sql),
+    Query("a6_asof_semdedup", a6AsofSemDedup, a6Sql),
+    Query("i1_ivf_topk", i1IvfTopk, i1Sql),
+    Query("i12_ivf_bq_rerank", i12IvfBqRerank, i12Sql),
+    Query("i2_pq_topk", i2PqTopk, i2Sql),
+    Query("i3_ivf_pq_rerank", i3IvfPqRerank, i3Sql),
+    Query("i4_pq_distortion", i4PqDistortion, i4Sql),
+    Query("i5_ann_at_rest", i5AnnAtRest, i3Sql), // same answer, served from artifacts
+    Query("i6_ivf_recall", i6IvfRecall, i6Sql),
+    Query("i7_filtered_ann", i7FilteredAnn, i7Sql),
+    Query("i8_incremental_ivf", i8IncrementalIvf, i8Sql),
+    Query("i9_grown_recall", i9GrownRecall, i9Sql),
+    Query("i10_retrain_loop", i10RetrainLoop, i10Sql),
     // same answer, baseline audit read from the at-rest artifact
-    "i10b_retrain_at_rest" -> i10Sql,
-    "s1_skew_agg" -> s1Sql,
-    "s2_skew_join" -> s2Sql,
-    "s3_adaptive_skew_join" -> s3Sql,
-    "s4_bucketed_join" -> s4Sql,
-    "b1_bloom_join" -> b1Sql,
-    "b2_bloom_anti_join" -> b2Sql,
-    "p2_percentile_dist" -> p2Sql)
+    Query("i10b_retrain_at_rest", i10RetrainAtRest, i10Sql),
+    Query("i11_asof_ann", i11AsofAnn, i11Sql),
+    Query("i13_ann_deletes", i13AnnDeletes, i13Sql),
+    Query("s1_skew_agg", s1SkewAgg, s1Sql),
+    Query("s2_skew_join", s2SkewJoin, s2Sql),
+    Query("s3_adaptive_skew_join", s3AdaptiveSkewJoin, s3Sql),
+    Query("s4_bucketed_join", s4BucketedJoin, s4Sql),
+    Query("b1_bloom_join", b1BloomJoin, b1Sql),
+    Query("b2_bloom_anti_join", b2BloomAntiJoin, b2Sql),
+    Query("p2_percentile_dist", p2PercentileDist, p2Sql))
 }

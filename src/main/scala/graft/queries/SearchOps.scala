@@ -17,7 +17,7 @@ import graft.operators.{KeywordSearch, Redact}
   * phone numbers onto each document from its own key — a genuine
   * cross-engine regex-parity check, not a vacuous empty diff).
   */
-object SearchOps {
+object SearchOps extends QueryFamily {
 
   /** Query terms spanning the corpus's df spectrum: `dup` is rare (~5% of
     * docs) so its odds-ratio idf dominates; `spark`/`vector` are common
@@ -898,53 +898,32 @@ object SearchOps {
        |WHERE rn = 1 ORDER BY rb""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "k1_bm25_topk" -> (k1Bm25TopK _),
-    "k11_rolling_bm25" -> (k11RollingBm25 _),
-    "k12_rolling_fuzzy" -> (k12RollingFuzzy _),
-    "k13_rolling_phrase" -> (k13RollingPhrase _),
-    "k14_rolling_near" -> (k14RollingNear _),
-    "k15_asof_bm25" -> (k15AsofBm25 _),
-    "k16_asof_phrase" -> (k16AsofPhrase _),
-    "k6_search_at_rest" -> (k6SearchAtRest _),
-    "k17_boolean_retrieval" -> (k17BooleanRetrieval _),
-    "k18_ranked_boolean" -> (k18RankedBoolean _),
-    "k19_search_snippets" -> (k19SearchSnippets _),
-    "k4_phrase_search" -> (k4PhraseSearch _),
-    "k5_proximity_search" -> (k5ProximitySearch _),
-    "k2_tfidf_term" -> (k2TfidfTerm _),
-    "k3_pii_redact" -> (k3PiiRedact _),
-    "k7_fuzzy_search" -> (k7FuzzySearch _),
-    "k8_fuzzy_at_rest" -> (k8FuzzyAtRest _),
-    "k9_proximity_at_rest" -> (k9ProximityAtRest _),
-    "k10_phrase_at_rest" -> (k10PhraseAtRest _))
-
-  val oracles: Map[String, String] = Map(
-    "k1_bm25_topk" -> k1Sql,
+  val registry: Seq[Query] = Seq(
+    Query("k1_bm25_topk", k1Bm25TopK, k1Sql),
     // same answer, served from the rolling segment index
-    "k11_rolling_bm25" -> k1Sql,
-    "k6_search_at_rest" -> k1Sql, // same answer, served from the index
-    "k17_boolean_retrieval" -> k17Sql,
-    "k18_ranked_boolean" -> k18Sql,
-    "k19_search_snippets" -> k19Sql,
-    "k4_phrase_search" -> k4Sql,
-    "k5_proximity_search" -> k5Sql,
-    "k2_tfidf_term" -> k2Sql,
-    "k3_pii_redact" -> k3Sql,
-    "k7_fuzzy_search" -> k7Sql,
-    // same answer, served from the persisted variant shards
-    "k8_fuzzy_at_rest" -> k7Sql,
+    Query("k11_rolling_bm25", k11RollingBm25, k1Sql),
     // same answer, served from the rolling variant segments
-    "k12_rolling_fuzzy" -> k7Sql,
-    // same answers, served from the persisted positional index
-    "k9_proximity_at_rest" -> k5Sql,
-    "k10_phrase_at_rest" -> k4Sql,
+    Query("k12_rolling_fuzzy", k12RollingFuzzy, k7Sql),
     // same answers, served from the rolling positional segments after
     // a stale version is superseded — the final live corpus IS the table
-    "k13_rolling_phrase" -> k4Sql,
-    "k14_rolling_near" -> k5Sql,
+    Query("k13_rolling_phrase", k13RollingPhrase, k4Sql),
+    Query("k14_rolling_near", k14RollingNear, k5Sql),
     // the time-travel point: scores/phrases over the corpus AS IT
     // STOOD at batch 1 (stale third still live, future tombstone ignored)
-    "k15_asof_bm25" -> k15Sql,
-    "k16_asof_phrase" -> k16Sql)
+    Query("k15_asof_bm25", k15AsofBm25, k15Sql),
+    Query("k16_asof_phrase", k16AsofPhrase, k16Sql),
+    Query("k6_search_at_rest", k6SearchAtRest, k1Sql), // same answer, served from the index
+    Query("k17_boolean_retrieval", k17BooleanRetrieval, k17Sql),
+    Query("k18_ranked_boolean", k18RankedBoolean, k18Sql),
+    Query("k19_search_snippets", k19SearchSnippets, k19Sql),
+    Query("k4_phrase_search", k4PhraseSearch, k4Sql),
+    Query("k5_proximity_search", k5ProximitySearch, k5Sql),
+    Query("k2_tfidf_term", k2TfidfTerm, k2Sql),
+    Query("k3_pii_redact", k3PiiRedact, k3Sql),
+    Query("k7_fuzzy_search", k7FuzzySearch, k7Sql),
+    // same answer, served from the persisted variant shards
+    Query("k8_fuzzy_at_rest", k8FuzzyAtRest, k7Sql),
+    // same answers, served from the persisted positional index
+    Query("k9_proximity_at_rest", k9ProximityAtRest, k5Sql),
+    Query("k10_phrase_at_rest", k10PhraseAtRest, k4Sql))
 }

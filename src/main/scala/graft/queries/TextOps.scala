@@ -16,7 +16,7 @@ import graft.Tables
   * live in `graft.operators` and are spec-tested against these exact
   * versions.
   */
-object TextOps {
+object TextOps extends QueryFamily {
 
   /** d1: exact dedup via content hash + group-by, keeping the smallest
     * doc_id (SURVEY A5/A6 scaled up: the canonical 100 TB exact-dedup is a
@@ -2187,89 +2187,46 @@ object TextOps {
       |FROM g GROUP BY bigram
       |ORDER BY n_occurrences DESC, bigram LIMIT 30""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d26_bigram_topk" -> (d26BigramTopK _),
-    "d25_dup_passages" -> (d25DupPassages _),
-    "d9_hash_split" -> (d9HashSplit _),
-    "d10_vocab_topk" -> (d10VocabTopK _),
-    "d23_oov_rate" -> (d23OovRate _),
-    "d24_token_gini" -> (d24TokenGini _),
-    "d11_repetition" -> (d11Repetition _),
-    "d12_len_profile" -> (d12LenProfile _),
-    "d7_bpe_tokens" -> (d7BpeTokens _),
-    "d8_rolling_hash" -> (d8RollingHash _),
-    "d39_cdc_chunks" -> (d39CdcChunks _),
-    "d1_exact_dedup" -> (d1ExactDedup _),
-    "d2_token_stats" -> (d2TokenStats _),
-    "d3_quality_score" -> (d3QualityScore _),
-    "d4_fingerprint" -> (d4Fingerprint _),
-    "d5_lang_score" -> (d5LangScore _),
-    "d6_jaccard_neardup" -> (d6JaccardNearDup _),
-    "d27_containment" -> (d27Containment _),
-    "d29_readability" -> (d29Readability _),
-    "d30_ngram_novelty" -> (d30NgramNovelty _),
-    "d31_hapax_rate" -> (d31HapaxRate _),
-    "d32_bpe_merges" -> (d32BpeMerges _),
-    "d33_bpe_encode" -> (d33BpeEncode _),
-    "d34_length_buckets" -> (d34LengthBuckets _),
-    "d36_coverage_curve" -> (d36CoverageCurve _),
-    "d37_len_quality_corr" -> (d37LenQualityCorr _),
-    "d38_lm_quality" -> (d38LmQuality _),
-    "d40_source_drift" -> (d40SourceDrift _),
-    "d41_matched_pairs" -> (d41MatchedPairs _),
-    "d42_unicode_audit" -> (d42UnicodeAudit _),
-    "d43_k_anonymity" -> (d43KAnonymity _),
-    "d44_bpe_fertility" -> (d44BpeFertility _),
-    "d45_asof_kanon" -> (d45AsofKanon _),
-    "d46_dup_gram_fraction" -> (d46DupGramFraction _),
-    "d47_corpus_datasheet" -> (d47CorpusDatasheet _),
-    "d48_span_dedup" -> (d48SpanDedup _),
-    "d49_gopher_repetition" -> (d49GopherRepetition _),
-    "d51_gopher_quality" -> (d51GopherQuality _),
-    "d52_gopher_verdict" -> (d52GopherVerdict _),
-    "d50_rolling_spans" -> (d50RollingSpans _),
-    "d13_clean_pipeline" -> (d13CleanPipeline _))
-
-  val oracles: Map[String, String] = Map(
-    "d26_bigram_topk" -> d26Sql,
-    "d25_dup_passages" -> d25Sql,
-    "d9_hash_split" -> d9Sql,
-    "d10_vocab_topk" -> d10Sql,
-    "d23_oov_rate" -> d23Sql,
-    "d24_token_gini" -> d24Sql,
-    "d11_repetition" -> d11Sql,
-    "d12_len_profile" -> d12Sql,
-    "d7_bpe_tokens" -> d7Sql,
-    "d8_rolling_hash" -> d8Sql,
-    "d39_cdc_chunks" -> d39Sql,
-    "d1_exact_dedup" -> d1Sql,
-    "d2_token_stats" -> d2Sql,
-    "d3_quality_score" -> d3Sql,
-    "d4_fingerprint" -> d4Sql,
-    "d5_lang_score" -> d5Sql,
-    "d6_jaccard_neardup" -> d6Sql,
-    "d27_containment" -> d27Sql,
-    "d29_readability" -> d29Sql,
-    "d30_ngram_novelty" -> d30Sql,
-    "d31_hapax_rate" -> d31Sql,
-    "d32_bpe_merges" -> d32Sql,
-    "d33_bpe_encode" -> d33Sql,
-    "d34_length_buckets" -> d34Sql,
-    "d36_coverage_curve" -> d36Sql,
-    "d37_len_quality_corr" -> d37Sql,
-    "d38_lm_quality" -> d38Sql,
-    "d40_source_drift" -> d40Sql,
-    "d41_matched_pairs" -> d41Sql,
-    "d42_unicode_audit" -> d42Sql,
-    "d43_k_anonymity" -> d43Sql,
-    "d44_bpe_fertility" -> d44Sql,
-    "d45_asof_kanon" -> d45Sql,
-    "d46_dup_gram_fraction" -> d46Sql,
-    "d47_corpus_datasheet" -> d47Sql,
-    "d48_span_dedup" -> d48Sql,
-    "d49_gopher_repetition" -> d49Sql,
-    "d51_gopher_quality" -> d51Sql,
-    "d52_gopher_verdict" -> d52Sql,
-    "d50_rolling_spans" -> d50Sql,
-    "d13_clean_pipeline" -> d13Sql)
+  val registry: Seq[Query] = Seq(
+    Query("d26_bigram_topk", d26BigramTopK, d26Sql),
+    Query("d25_dup_passages", d25DupPassages, d25Sql),
+    Query("d9_hash_split", d9HashSplit, d9Sql),
+    Query("d10_vocab_topk", d10VocabTopK, d10Sql),
+    Query("d23_oov_rate", d23OovRate, d23Sql),
+    Query("d24_token_gini", d24TokenGini, d24Sql),
+    Query("d11_repetition", d11Repetition, d11Sql),
+    Query("d12_len_profile", d12LenProfile, d12Sql),
+    Query("d7_bpe_tokens", d7BpeTokens, d7Sql),
+    Query("d8_rolling_hash", d8RollingHash, d8Sql),
+    Query("d39_cdc_chunks", d39CdcChunks, d39Sql),
+    Query("d1_exact_dedup", d1ExactDedup, d1Sql),
+    Query("d2_token_stats", d2TokenStats, d2Sql),
+    Query("d3_quality_score", d3QualityScore, d3Sql),
+    Query("d4_fingerprint", d4Fingerprint, d4Sql),
+    Query("d5_lang_score", d5LangScore, d5Sql),
+    Query("d6_jaccard_neardup", d6JaccardNearDup, d6Sql),
+    Query("d27_containment", d27Containment, d27Sql),
+    Query("d29_readability", d29Readability, d29Sql),
+    Query("d30_ngram_novelty", d30NgramNovelty, d30Sql),
+    Query("d31_hapax_rate", d31HapaxRate, d31Sql),
+    Query("d32_bpe_merges", d32BpeMerges, d32Sql),
+    Query("d33_bpe_encode", d33BpeEncode, d33Sql),
+    Query("d34_length_buckets", d34LengthBuckets, d34Sql),
+    Query("d36_coverage_curve", d36CoverageCurve, d36Sql),
+    Query("d37_len_quality_corr", d37LenQualityCorr, d37Sql),
+    Query("d38_lm_quality", d38LmQuality, d38Sql),
+    Query("d40_source_drift", d40SourceDrift, d40Sql),
+    Query("d41_matched_pairs", d41MatchedPairs, d41Sql),
+    Query("d42_unicode_audit", d42UnicodeAudit, d42Sql),
+    Query("d43_k_anonymity", d43KAnonymity, d43Sql),
+    Query("d44_bpe_fertility", d44BpeFertility, d44Sql),
+    Query("d45_asof_kanon", d45AsofKanon, d45Sql),
+    Query("d46_dup_gram_fraction", d46DupGramFraction, d46Sql),
+    Query("d47_corpus_datasheet", d47CorpusDatasheet, d47Sql),
+    Query("d48_span_dedup", d48SpanDedup, d48Sql),
+    Query("d49_gopher_repetition", d49GopherRepetition, d49Sql),
+    Query("d51_gopher_quality", d51GopherQuality, d51Sql),
+    Query("d52_gopher_verdict", d52GopherVerdict, d52Sql),
+    Query("d50_rolling_spans", d50RollingSpans, d50Sql),
+    Query("d13_clean_pipeline", d13CleanPipeline, d13Sql))
 }

@@ -17,7 +17,7 @@ import graft.Tables
   * Spark's `aggregate(zip_with(...))` and DuckDB's `list_dot_product` over
   * `DOUBLE[]` produce bit-identical results.
   */
-object VectorOps {
+object VectorOps extends QueryFamily {
 
   /** Sequential-order dot product — `graft.functions.DotProduct`
     * (codegen'd primitive loop, bit-identical to the aggregate/zip_with
@@ -811,35 +811,19 @@ object VectorOps {
       |SELECT q_id, vec_id AS neighbor, cos, rk
       |FROM ranked WHERE rk <= 5 ORDER BY q_id, rk""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "v12_hard_negatives" -> (v12HardNegatives _),
-    "v8_sq8_rerank" -> (v8Sq8Rerank _),
-    "v9_top_eigen" -> (v9TopEigen _),
-    "v11_matryoshka_recall" -> (v11MatryoshkaRecall _),
-    "v13_bq_recall" -> (v13BqRecall _),
-    "v10_norm_audit" -> (v10NormAudit _),
-    "a3_quality_typicality_corr" -> (a3QualityTypicalityCorr _),
-    "v7_mmr_rerank" -> (v7MmrRerank _),
-    "v1_knn_brute" -> (v1KnnBrute _),
-    "v2_label_stats" -> (v2LabelStats _),
-    "v3_label_centroid" -> (v3LabelCentroid _),
-    "v4_quantize_int8" -> (v4QuantizeInt8 _),
-    "v5_centroid_sim" -> (v5CentroidSim _),
-    "v6_label_noise" -> (v6LabelNoise _))
-
-  val oracles: Map[String, String] = Map(
-    "v12_hard_negatives" -> v12Sql,
-    "v8_sq8_rerank" -> v8Sql,
-    "v9_top_eigen" -> v9Sql,
-    "v11_matryoshka_recall" -> v11Sql,
-    "v13_bq_recall" -> v13Sql,
-    "v10_norm_audit" -> v10Sql,
-    "a3_quality_typicality_corr" -> a3Sql,
-    "v7_mmr_rerank" -> v7Sql,
-    "v1_knn_brute" -> v1Sql,
-    "v2_label_stats" -> v2Sql,
-    "v3_label_centroid" -> v3Sql,
-    "v4_quantize_int8" -> v4Sql,
-    "v5_centroid_sim" -> v5Sql,
-    "v6_label_noise" -> v6Sql)
+  val registry: Seq[Query] = Seq(
+    Query("v12_hard_negatives", v12HardNegatives, v12Sql),
+    Query("v8_sq8_rerank", v8Sq8Rerank, v8Sql),
+    Query("v9_top_eigen", v9TopEigen, v9Sql),
+    Query("v11_matryoshka_recall", v11MatryoshkaRecall, v11Sql),
+    Query("v13_bq_recall", v13BqRecall, v13Sql),
+    Query("v10_norm_audit", v10NormAudit, v10Sql),
+    Query("a3_quality_typicality_corr", a3QualityTypicalityCorr, a3Sql),
+    Query("v7_mmr_rerank", v7MmrRerank, v7Sql),
+    Query("v1_knn_brute", v1KnnBrute, v1Sql),
+    Query("v2_label_stats", v2LabelStats, v2Sql),
+    Query("v3_label_centroid", v3LabelCentroid, v3Sql),
+    Query("v4_quantize_int8", v4QuantizeInt8, v4Sql),
+    Query("v5_centroid_sim", v5CentroidSim, v5Sql),
+    Query("v6_label_noise", v6LabelNoise, v6Sql))
 }

@@ -985,11 +985,6 @@ object Hdf5 {
 
   // ---- netCDF-4 semantics ---------------------------------------------
 
-  /** True when the dataset is a netCDF-4 dimension scale (the HDF5
-    * encoding of a dimension). */
-  private def isDimScale(d: Dataset): Boolean =
-    d.attrs.get("CLASS").contains("DIMENSION_SCALE")
-
   /** A dimension scale that is ALSO a real variable carries coordinate
     * values; pure dimensions get the sentinel NAME prefix. */
   private def isPhonyDim(d: Dataset): Boolean =

@@ -1189,7 +1189,7 @@ object StreamOps {
     * log is bounded by re-ingests since the last segment merge, so it
     * broadcasts; with no tombstones landed this is a no-op. */
   private def dropDeadVersions(spark: SparkSession, probed: DataFrame,
-      tombsPath: String, asOf: Long = Long.MaxValue): DataFrame =
+      tombsPath: String, asOf: Long): DataFrame =
     if (!hasParquetData(spark, tombsPath)) probed
     else {
       // a tombstone's OWN partition batch_id is the batch that landed the
@@ -1543,7 +1543,7 @@ object StreamOps {
       staticIndex: graft.operators.MinHashDedup.DedupIndex,
       prev: DataFrame, idCol: String, textCol: String,
       threshold: Double, statePath: String, batchId: Long,
-      validateDisjoint: Boolean = true): DataFrame = {
+      validateDisjoint: Boolean): DataFrame = {
     val pairs = sweepBatchAccum(batch, staticIndex, idCol, textCol,
       threshold, statePath, batchId, validateDisjoint)
     try ccAdvance(prev, pairs, statePath, batchId)

@@ -7,14 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * in the forked test JVM). sf0.001 keeps every suite sub-second-ish. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -38,13 +34,15 @@ class GraftSpec extends AnyFunSuite {
     }
   }
 
-  test("queries and oracles are in 1:1 correspondence") {
-    val orphanOracles = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphanOracles.isEmpty, s"oracle entries without queries: $orphanOracles")
-    // every query here is SQL-expressible; a missing oracle would
-    // silently downgrade it to the driver's weaker rows-only check
-    val unchecked = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(unchecked.isEmpty, s"queries without oracle coverage: $unchecked")
+  test("registry names are unique across the families and every oracle SQL is non-blank") {
+    // the name-keyed views keep one of two same-named entries silently
+    val dup = SparkEntry.registry.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    assert(dup.isEmpty, s"query names registered twice: $dup")
+    assert(SparkEntry.queries.size == SparkEntry.registry.size)
+    // a blank oracle would silently downgrade its query to a weaker
+    // rows-only check
+    val blank = SparkEntry.registry.filter(_.oracleSql.isBlank).map(_.name)
+    assert(blank.isEmpty, s"queries with a blank oracle SQL: $blank")
   }
 
   test("q1_agg groups are the lineitem flag/status domain") {

@@ -546,7 +546,7 @@ class MediaOpsSpec extends AnyFunSuite {
       pairs.toSeq.groupBy(p => find(p._1)).map { case (c, es) => c -> es.size.toLong }
     val (wt, wi, wa, wv) = (edgeCount(txtPairs), edgeCount(imgPairs),
       edgeCount(audPairs), edgeCount(vidPairs))
-    val got = MediaOps.queries("mm13_multimodal_clusters")(spark, sfDir)
+    val got = SparkEntry.queries("mm13_multimodal_clusters")(spark, sfDir)
       .collect().map(r => (r.getLong(0),
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
     assert(got.keySet == wantSizes.keySet,
@@ -570,7 +570,7 @@ class MediaOpsSpec extends AnyFunSuite {
     val texts = graft.Tables(spark, sfDir, "documents")
       .select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val got = MediaOps.queries("mm14_image_neardup_at_rest")(spark, sfDir)
+    val got = SparkEntry.queries("mm14_image_neardup_at_rest")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     // ground truth: all-pairs Hamming<=4 restricted to (landed, arrival)
     val want = bruteForcePairs(texts.map { case (id, t) => id -> mm10Bits(t) })
@@ -583,7 +583,7 @@ class MediaOpsSpec extends AnyFunSuite {
     val marker = root.resolve("_STATE_OK")
     assert(java.nio.file.Files.exists(marker))
     val markerTime = java.nio.file.Files.getLastModifiedTime(marker)
-    val again = MediaOps.queries("mm14_image_neardup_at_rest")(spark, sfDir)
+    val again = SparkEntry.queries("mm14_image_neardup_at_rest")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(again == got)
     assert(java.nio.file.Files.getLastModifiedTime(marker) == markerTime,
@@ -596,7 +596,7 @@ class MediaOpsSpec extends AnyFunSuite {
     val texts = graft.Tables(spark, sfDir, "documents")
       .select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val got = MediaOps.queries("mm15_audio_neardup_at_rest")(spark, sfDir)
+    val got = SparkEntry.queries("mm15_audio_neardup_at_rest")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     // ground truth: all-pairs Hamming<=4 restricted to (landed, arrival)
     val want = bruteForcePairs(texts.map { case (id, t) => id -> mm11Bits(t) })
@@ -609,7 +609,7 @@ class MediaOpsSpec extends AnyFunSuite {
     val marker = root.resolve("_STATE_OK")
     assert(java.nio.file.Files.exists(marker))
     val markerTime = java.nio.file.Files.getLastModifiedTime(marker)
-    val again = MediaOps.queries("mm15_audio_neardup_at_rest")(spark, sfDir)
+    val again = SparkEntry.queries("mm15_audio_neardup_at_rest")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(again == got)
     assert(java.nio.file.Files.getLastModifiedTime(marker) == markerTime,
