@@ -1,13 +1,14 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Per-job diagnostic runner (optimization rounds): runs named
   * `SparkEntry.queries` entries once under the bench session config and
-  * prints every Spark job's wall time and description, plus totals — the
-  * local-mode stand-in for the Spark UI's job table (the UI is disabled
-  * in bench runs). Usage:
+  * prints every Spark job's wall time and description, the stages of
+  * each query's three slowest jobs, plus totals — the local-mode
+  * stand-in for the Spark UI's job table (the UI is disabled in bench
+  * runs). Usage:
   *
   *   runMain graft.QueryDiag <sfDir> <name1,name2,...>
   */
@@ -18,7 +19,8 @@ object QueryDiag {
     val spark = GraftSession.fromEnv()
     val starts = new ConcurrentHashMap[Int, (Long, String, Seq[Int])]()
     val stages = new ConcurrentHashMap[Int, String]()
-    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // (job id, wall ms, description, stage ids) in completion order
+    val jobs = new ConcurrentLinkedQueue[(Int, Double, String, Seq[Int])]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         val desc = Option(js.properties)
@@ -34,18 +36,14 @@ object QueryDiag {
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit = {
         Option(starts.remove(je.jobId)).foreach { case (t0, desc, sids) =>
-          val ms = (System.nanoTime() - t0) / 1e6
-          lines.add(f"job ${je.jobId}%4d ${ms}%9.1f ms  $desc")
-          if (ms > 300)
-            sids.sorted.foreach(sid =>
-              Option(stages.get(sid)).foreach(lines.add))
+          jobs.add((je.jobId, (System.nanoTime() - t0) / 1e6, desc, sids))
         }
       }
     })
     for (name <- names.split(",").map(_.trim).filter(_.nonEmpty)) {
       SparkEntry.queries.get(name) match {
         case Some(fn) =>
-          lines.clear()
+          jobs.clear()
           stages.clear()
           val t0 = System.nanoTime()
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -54,10 +52,16 @@ object QueryDiag {
           // listener delivery is async: wait until every queued event
           // has reached the listener
           org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
-          // stage lines of slow jobs share the queue; count the jobs only
-          val jobs = lines.stream().filter(_.startsWith("job ")).count()
-          println(s"===== $name total ${f"$total%.2f"} s, $jobs jobs =====")
-          lines.forEach(l => println(l))
+          val done = jobs.toArray(Array.empty[(Int, Double, String, Seq[Int])])
+          // the stage view of the query's slowest jobs, however fast
+          // the query is
+          val slowest = done.sortBy(-_._2).take(3).map(_._1).toSet
+          println(s"===== $name total ${f"$total%.2f"} s, ${done.length} jobs =====")
+          done.foreach { case (id, ms, desc, sids) =>
+            println(f"job $id%4d $ms%9.1f ms  $desc")
+            if (slowest(id))
+              sids.sorted.foreach(sid => Option(stages.get(sid)).foreach(println))
+          }
         case None => System.err.println(s"[diag] unknown query: $name")
       }
     }

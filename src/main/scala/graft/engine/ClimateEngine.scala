@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.answer.{EchoLlm, Format, LlmClient}
 import graft.model.Domain
 import graft.nlp.Parsers
+import graft.operators.SizeRule
 import graft.query._
 
 /** End-to-end NL→answer pipeline over the four climate domains — the
@@ -25,10 +26,10 @@ class ClimateEngine(spark: SparkSession, tables: Map[String, DataFrame],
                     today: java.time.LocalDate = java.time.LocalDate.now()) {
 
   /** The registered tables as the engine plans them: each small one as a
-    * single partition (see [[ClimateEngine.singlePartitionIfSmall]]), so
-    * every question over it runs as one job of one task. */
+    * single partition (see [[graft.operators.SizeRule]]), so every
+    * question over it runs as one job of one task. */
   private val planned: Map[String, DataFrame] =
-    tables.map { case (name, df) => name -> ClimateEngine.singlePartitionIfSmall(df) }
+    tables.map { case (name, df) => name -> SizeRule.singlePartitionIfSmall(df) }
 
   private def resolve(name: String): DataFrame =
     planned.getOrElse(name, sys.error(s"unregistered table '$name'"))
@@ -210,28 +211,4 @@ class ClimateEngine(spark: SparkSession, tables: Map[String, DataFrame],
     }.mkString("\n")
     llm.answer(question, body)
   }
-}
-
-object ClimateEngine {
-
-  /** The largest table, by the optimizer's size estimate, that the engine
-    * plans as one partition. For parquet the estimate is the bytes of the
-    * compressed files: the ERA5 shape takes about 6 bytes a row, so 8 MiB
-    * is about 1.4M rows. Measured on 4 cores (`local[4]`, 4 files, ERA5
-    * questions, median of 80 each, one partition vs the parallel scan):
-    * 6.4 MB 219 vs 237 ms, 8.5 MB 250 vs 267 ms, 10.6 MB 223 vs 224 ms,
-    * 12.9 MB 259 vs 241 ms, 17.0 MB 290 vs 243 ms (README "NL engine").
-    * The cutoff sits below the ~11 MB crossing because more cores make
-    * the parallel scan faster and move the crossing down. */
-  val SinglePartitionMaxBytes: Long = 8L << 20
-
-  /** `df.coalesce(1)` when the optimizer's size estimate for `df` is at
-    * or below `maxBytes`, else `df` unchanged. The estimate reads metadata
-    * only and runs no job. Filters and column pruning still push below the
-    * coalesce, and on one partition the aggregate and the sort need no
-    * `Exchange`, so a question plans as one stage with no shuffle. */
-  private[graft] def singlePartitionIfSmall(df: DataFrame,
-                                            maxBytes: Long = SinglePartitionMaxBytes): DataFrame =
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= maxBytes) df.coalesce(1)
-    else df
 }

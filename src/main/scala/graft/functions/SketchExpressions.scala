@@ -266,7 +266,6 @@ case class Hex60Array(child: Expression)
     extends UnaryExpression with ImplicitCastInputTypes {
 
   import org.apache.spark.sql.types.StringType
-  import org.apache.spark.unsafe.types.UTF8String
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))

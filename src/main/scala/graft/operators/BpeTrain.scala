@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** BPE tokenizer TRAINING (Sennrich, Haddow & Birch 2016, "Neural machine
   * translation of rare words with subword units") — learn the merge table

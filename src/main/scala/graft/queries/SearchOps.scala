@@ -668,7 +668,12 @@ object SearchOps extends QueryFamily {
     * the per-segment df contributions — the answer equals k7's
     * from-scratch vocabulary scan exactly, so the oracle is k7's own
     * SQL (the k8 convention). The search tier's second rolling
-    * artifact, beside k11's postings segments. */
+    * artifact, beside k11's postings segments. Waves and probe are
+    * planned by the size rule ([[graft.operators.SizeRule]]): a wave of
+    * this corpus computes on one partition and writes its shard files
+    * in parallel, and the probe runs on one partition. The state is
+    * this call's own temp root, so the probe is collected once, without
+    * [[graft.streaming.StreamOps.fuzzyServeRolling]]'s read pin. */
   def k12RollingFuzzy(s: SparkSession, dir: String): DataFrame = {
     import graft.streaming.StreamOps
     val docs = Tables(s, dir, "documents")
@@ -680,7 +685,7 @@ object SearchOps extends QueryFamily {
           "doc_id", "text", K8Shards, s"$root/state", b.toLong)
       }
       val res = StreamOps
-        .fuzzyServeRolling(s, s"$root/state", TypoTerms, K8Shards)
+        .fuzzyServeRollingPlan(s, s"$root/state", TypoTerms, K8Shards)
         .orderBy("query_term", "matched_term")
       // bounded (a few suggestion rows): materialize before state delete
       s.createDataFrame(java.util.Arrays.asList(res.collect(): _*), res.schema)
@@ -816,7 +821,6 @@ object SearchOps extends QueryFamily {
     * joins back against only the [[K19Docs]] winning docs (broadcast).
     * Output: (doc_id, rb, start_pos, n_terms, snippet). */
   def k19SearchSnippets(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val top = KeywordSearch
       .bm25(Tables(s, dir, "documents"), "doc_id", "text", QueryTerms)
       .filter(col("score") > 0)

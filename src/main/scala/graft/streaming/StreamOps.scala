@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** Structured Streaming ingestion path over the events stream (north-star
   * extension, SURVEY §2.9/§7.2 phase 7 — the reference has no streaming;
@@ -2763,34 +2763,54 @@ object StreamOps {
       .start()
 
   /** One micro-batch of [[fuzzyIndexPerBatch]] — package-visible so the
-    * spec can force a replay and k12 can drive batch waves. */
+    * spec can force a replay, k12 can drive batch waves and the composed
+    * gate ([[deployGatesBatch]]) can land its fuzzy leg. The rows to land
+    * are planned by the size rule ([[fuzzyWave]]), not by a session-wide
+    * shuffle width: no count, no conf change. */
   private[graft] def fuzzyIndexBatch(batch: DataFrame, idCol: String,
       textCol: String, shards: Int, statePath: String, batchId: Long): Unit =
-    withBatchShuffleWidth(batch.sparkSession, batch.count(), statePath) {
-      fuzzyIndexBatchImpl(batch, idCol, textCol, shards, statePath, batchId)
-    }
+    fuzzyWave(batch, idCol, textCol, shards, batchId)
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id", "shard")
+      .parquet(s"$statePath/fuzzy_variants")
 
-  /** [[fuzzyIndexBatch]] without the width wrapper — the composed gate
-    * calls it inside its own already-narrowed region. */
-  private def fuzzyIndexBatchImpl(batch: DataFrame, idCol: String,
-      textCol: String, shards: Int, statePath: String, batchId: Long): Unit = {
-    val df = batch
+  /** The (term, df, variant, shard, batch_id) rows one wave lands. A batch
+    * at or below `maxBytes` ([[graft.operators.SizeRule]]) computes on one
+    * partition — the distinct and the df aggregate plan with no
+    * `Exchange` — and is then hash-split by shard over at most
+    * `defaultParallelism` tasks, so the `shards` files are written in
+    * parallel, each leaf by exactly one task. A larger batch keeps the
+    * session's parallel plan. Package-visible for the plan audits. */
+  private[graft] def fuzzyWave(batch: DataFrame, idCol: String,
+      textCol: String, shards: Int, batchId: Long,
+      maxBytes: Long = graft.operators.SizeRule.SinglePartitionMaxBytes)
+      : DataFrame = {
+    val small = graft.operators.SizeRule.isSmall(batch, maxBytes)
+    val rows = (if (small) batch.coalesce(1) else batch)
       .select(col(idCol).as("id"),
         explode(split(col(textCol), " ")).as("term"))
       .distinct()
       .groupBy(col("term")).agg(count(lit(1)).as("df"))
-    df.select(col("term"), col("df"),
+      .select(col("term"), col("df"),
         explode(graft.queries.SearchOps.deletionVariants(col("term")))
           .as("variant"))
       .withColumn("shard",
         pmod(graft.operators.PortableHash.hex60(col("variant")),
           lit(shards.toLong)).cast("int"))
       .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id", "shard")
-      .parquet(s"$statePath/fuzzy_variants")
+    if (!small) rows
+    else rows.repartition(
+      math.min(shards, batch.sparkSession.sparkContext.defaultParallelism),
+      col("shard"))
   }
+
+  /** [[fuzzyIndexBatch]]'s on-disk schema, partition columns included:
+    * declared so a probe plans without a footer-reading job. */
+  private val FuzzyVariantSchema = StructType(Seq(
+    StructField("term", StringType), StructField("df", LongType),
+    StructField("variant", StringType), StructField("batch_id", LongType),
+    StructField("shard", IntegerType)))
 
   /** Typo-tolerant term resolution served from the ROLLING variant
     * segments — k8's serving plan over [[fuzzyIndexPerBatch]]'s state:
@@ -2799,9 +2819,10 @@ object StreamOps {
     * variants' shard directories (partition-pruned across every
     * batch_id), collapse multi-variant matches WITHIN a segment, sum
     * each term's per-segment df contributions, and verify `levenshtein`
-    * on the blocked candidates. Returns k7's (query_term, matched_term,
-    * lev, df) — equal to the one-shot resolution over everything
-    * arrived (spec + oracle). */
+    * on the blocked candidates. A probe at or below the size rule's
+    * cutoff ([[graft.operators.SizeRule]]) runs on one partition. Returns
+    * k7's (query_term, matched_term, lev, df) — equal to the one-shot
+    * resolution over everything arrived (spec + oracle). */
   def fuzzyServeRolling(spark: SparkSession, statePath: String,
       queryTerms: Seq[String], shards: Int,
       // time travel: suggestions as of a batch frontier (inclusive) —
@@ -2815,7 +2836,8 @@ object StreamOps {
       .localCheckpoint()
 
   /** [[fuzzyServeRolling]]'s lazy plan — package-visible for the plan
-    * audits (probe shape executing inside the public pin). */
+    * audits (probe shape executing inside the public pin) and for k12,
+    * which owns its state and collects the plan once without the pin. */
   private[graft] def fuzzyServeRollingPlan(spark: SparkSession,
       statePath: String, queryTerms: Seq[String], shards: Int,
       asOf: Long = Long.MaxValue): DataFrame = {
@@ -2827,18 +2849,22 @@ object StreamOps {
     if (!hasParquetData(spark, s"$statePath/fuzzy_variants"))
       sys.error(s"fuzzyServeRolling: no variant segments landed at $statePath " +
         "— run fuzzyIndexPerBatch (or fuzzyIndexBatch) first")
-    val vvar = spark.read.parquet(s"$statePath/fuzzy_variants")
-      .filter(col("shard").isin(shardIds: _*) &&
-        col("variant").isin(qv.map(_._2).distinct: _*) &&
-        col("batch_id").cast("long") <= asOf)
+    // one root path and partition filters: explicit per-shard paths past
+    // 32 start Spark's parallel-listing job
+    val vvar = graft.operators.SizeRule.singlePartitionIfSmall(
+      spark.read.schema(FuzzyVariantSchema)
+        .parquet(s"$statePath/fuzzy_variants")
+        .filter(col("shard").isin(shardIds: _*) &&
+          col("variant").isin(qv.map(_._2).distinct: _*) &&
+          col("batch_id") <= asOf))
     import spark.implicits._
     broadcast(qv.toDF("query_term", "variant"))
       .join(vvar, "variant")
       // a term can match through several variants of one query term —
       // collapse within the segment (its df is one value per segment),
       // then sum the per-segment contributions
-      .select(col("query_term"), col("term"),
-        col("batch_id").cast("long").as("b"), col("df"))
+      .select(col("query_term"), col("term"), col("batch_id").as("b"),
+        col("df"))
       .distinct()
       .groupBy(col("query_term"), col("term"))
       .agg(sum(col("df")).as("df"))
@@ -3332,7 +3358,7 @@ object StreamOps {
         // token side
         bm25IndexBatchImpl(cached, cfg.idCol, cfg.textCol, cfg.bm25Shards,
           cfg.statePath, batchId)
-        fuzzyIndexBatchImpl(cached, cfg.idCol, cfg.textCol, cfg.fuzzyShards,
+        fuzzyIndexBatch(cached, cfg.idCol, cfg.textCol, cfg.fuzzyShards,
           cfg.statePath, batchId)
         posIndexBatchImpl(cached, cfg.idCol, cfg.textCol, cfg.posShards,
           cfg.statePath, batchId)

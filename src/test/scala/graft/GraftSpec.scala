@@ -16,6 +16,28 @@ object SparkTestSession {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Runs `body` with a [[JobCounter]] for job groups starting with
+    * `prefix` attached, waits until the listener bus has delivered every
+    * event of `body`'s jobs, and returns the counter. */
+  def countJobs(prefix: String)(body: => Unit): JobCounter = {
+    val counter = new JobCounter(prefix)
+    val sc = spark.sparkContext
+    sc.addSparkListener(counter)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain.drain(sc)
+    } finally sc.removeSparkListener(counter)
+    counter
+  }
+
+  /** Runs `body` with its jobs in job group `group`. The group sets no job
+    * description, so each SQL execution keeps its action's call site as
+    * its description ([[JobCounter.executions]]). */
+  def inJobGroup[T](group: String)(body: => T): T = {
+    spark.sparkContext.setJobGroup(group, null)
+    try body finally spark.sparkContext.clearJobGroup()
+  }
 }
 
 class GraftSpec extends AnyFunSuite {

@@ -1763,6 +1763,93 @@ class StreamOpsSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
+  test("fuzzy waves by the size rule: a small wave runs at most 2 jobs and no count, one file per shard leaf, a serve at most 2 jobs") {
+    import spark.implicits._
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("fuzzysize")
+    val state = root.resolve("state").toString
+    val queryTerms = Seq("vektor", "streem")
+    val waves = Seq(
+      Seq(1L -> "a vector engine with stream processing",
+        2L -> "vectors and streams everywhere"),
+      Seq(3L -> "the vector stream restores state",
+        4L -> "wholly unrelated prose body"))
+    type Sug = Set[(String, String, Int, Long)]
+    def rows(df: org.apache.spark.sql.DataFrame): Sug = df.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getLong(3))).toSet
+    var served, pinned: Sug = Set.empty
+    val counter = countJobs("fuzzy-size:") {
+      waves.zipWithIndex.foreach { case (w, b) =>
+        inJobGroup(s"fuzzy-size:wave$b")(StreamOps.fuzzyIndexBatch(
+          w.toDF("doc_id", "text"), "doc_id", "text", 16, state, b.toLong))
+      }
+      // k12's serve: the probe plan collected once
+      served = inJobGroup("fuzzy-size:serve")(
+        rows(StreamOps.fuzzyServeRollingPlan(spark, state, queryTerms, 16)))
+      pinned = inJobGroup("fuzzy-size:pinned")(
+        rows(StreamOps.fuzzyServeRolling(spark, state, queryTerms, 16)))
+    }
+    waves.indices.foreach { b =>
+      val g = s"fuzzy-size:wave$b"
+      val runs = counter.executions(g)
+      assert(counter.jobs.get(g) <= 2, s"wave $b: $runs")
+      assert(runs.nonEmpty && !runs.exists(_.startsWith("count at")), s"wave $b: $runs")
+    }
+    assert(counter.jobs.get("fuzzy-size:serve") <= 2)
+    // the public serve's read pin costs one job more
+    assert(counter.jobs.get("fuzzy-size:pinned") <= 3)
+    // the layout the parallel write keeps: one parquet file per leaf
+    val leaves = new java.io.File(state, "fuzzy_variants").listFiles()
+      .filter(_.getName.startsWith("batch_id="))
+      .flatMap(_.listFiles().filter(_.getName.startsWith("shard=")))
+    assert(leaves.map(_.getParentFile.getName).toSet ==
+      Set("batch_id=0", "batch_id=1"))
+    leaves.foreach { l =>
+      assert(l.listFiles().count(_.getName.endsWith(".parquet")) == 1, l.toString)
+    }
+    val vocabDf = waves.flatten.toDF("doc_id", "text")
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+      .distinct()
+      .groupBy(col("term")).agg(count(lit(1)).as("df"))
+    val oneShot = rows(queryTerms.toDF("query_term").crossJoin(vocabDf)
+      .filter(levenshtein(col("query_term"), col("term")) <= 1)
+      .select(col("query_term"), col("term"),
+        levenshtein(col("query_term"), col("term")).cast("int"), col("df")))
+    assert(served == oneShot && served.nonEmpty, s"$served vs $oneShot")
+    assert(pinned == oneShot)
+    graft.sources.Sources.deleteRecursively(root.toFile)
+  }
+
+  test("fuzzy wave over the size cutoff keeps the parallel plan: no coalesce, no added repartition") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    val batch = Seq(1L -> "a vector engine with stream processing",
+      2L -> "vectors and streams everywhere").toDF("doc_id", "text")
+    val est = batch.queryExecution.optimizedPlan.stats.sizeInBytes.toLong
+    // plan-only: the physical plan before any execution
+    def plan(maxBytes: Long): SparkPlan =
+      StreamOps.fuzzyWave(batch, "doc_id", "text", 16, 0L, maxBytes)
+        .queryExecution.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.executedPlan
+          case p => p
+        }
+    def coalesces(p: SparkPlan) = p.collect { case c: CoalesceExec => c }
+    def shardSplits(p: SparkPlan) = p.collect {
+      case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => e
+    }
+    val over = plan(est - 1)
+    assert(coalesces(over).isEmpty && shardSplits(over).isEmpty, over.toString)
+    // at the estimate: one partition, then the one shard split, which is
+    // the only exchange
+    val at = plan(est)
+    assert(coalesces(at).map(_.numPartitions) == Seq(1), at.toString)
+    assert(shardSplits(at).map(_.numPartitions) ==
+      Seq(math.min(16, spark.sparkContext.defaultParallelism)), at.toString)
+    assert(at.collect { case e: ShuffleExchangeExec => e }.size == 1, at.toString)
+  }
+
   test("bm25 supersede-on-land: re-ingested docs serve as their latest version only") {
     import spark.implicits._
     import java.nio.file.Files
