@@ -1,14 +1,15 @@
 package graft
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Per-job diagnostic runner (optimization rounds): runs named
   * `SparkEntry.queries` entries once under the bench session config and
   * prints every Spark job's wall time and description, the stages of
-  * each query's three slowest jobs, plus totals — the local-mode
-  * stand-in for the Spark UI's job table (the UI is disabled in bench
-  * runs). Usage:
+  * each query's three slowest jobs, plus totals (jobs, completed stages
+  * and their tasks) — the local-mode stand-in for the Spark UI's job
+  * table (the UI is disabled in bench runs). Usage:
   *
   *   runMain graft.QueryDiag <sfDir> <name1,name2,...>
   */
@@ -19,6 +20,9 @@ object QueryDiag {
     val spark = GraftSession.fromEnv()
     val starts = new ConcurrentHashMap[Int, (Long, String, Seq[Int])]()
     val stages = new ConcurrentHashMap[Int, String]()
+    // completed (stage id, task count) pairs: the query's stage and
+    // task totals, however its jobs split them
+    val stageTasks = new ConcurrentHashMap[Int, Int]()
     // (job id, wall ms, description, stage ids) in completion order
     val jobs = new ConcurrentLinkedQueue[(Int, Double, String, Seq[Int])]()
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -31,6 +35,7 @@ object QueryDiag {
         val si = sc.stageInfo
         val dur = (for (a <- si.completionTime; b <- si.submissionTime)
           yield a - b).getOrElse(-1L)
+        stageTasks.put(si.stageId, si.numTasks)
         stages.put(si.stageId,
           f"    stage ${si.stageId}%4d $dur%6d ms ${si.numTasks}%4dt ${si.name.take(90)}")
       }
@@ -45,6 +50,7 @@ object QueryDiag {
         case Some(fn) =>
           jobs.clear()
           stages.clear()
+          stageTasks.clear()
           val t0 = System.nanoTime()
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           val total = (System.nanoTime() - t0) / 1e9
@@ -56,7 +62,9 @@ object QueryDiag {
           // the stage view of the query's slowest jobs, however fast
           // the query is
           val slowest = done.sortBy(-_._2).take(3).map(_._1).toSet
-          println(s"===== $name total ${f"$total%.2f"} s, ${done.length} jobs =====")
+          val nTasks = stageTasks.values.asScala.sum
+          println(s"===== $name total ${f"$total%.2f"} s, ${done.length} jobs, " +
+            s"${stageTasks.size} stages, $nTasks tasks =====")
           done.foreach { case (id, ms, desc, sids) =>
             println(f"job $id%4d $ms%9.1f ms  $desc")
             if (slowest(id))

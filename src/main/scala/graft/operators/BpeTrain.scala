@@ -78,33 +78,19 @@ object BpeTrain {
     val syms = words.select(col("wc"), symbolize(col("w")).as("s"))
       .localCheckpoint(false)
     // the k merge rounds run with AQE off and a shuffle width sized to
-    // the word-TYPE table the loop actually shuffles (the
-    // ConnectedComponents loop pattern): each round's pair-count groupBy
-    // carries |types|-bounded rows whatever the corpus size, so
-    // session-width rounds are near-empty tasks whose scheduling —
-    // plus AQE's per-round materialize-and-replan — dominates. The
-    // count() is cheap (post-checkpoint); conf is save/restored exactly
-    // as the CC loop does, everything fallible before the first set.
-    val session = docs.sparkSession
-    val AqeKey = "spark.sql.adaptive.enabled"
-    val PartsKey = "spark.sql.shuffle.partitions"
-    graft.operators.ShuffleWidth.untouched(session)
-    val prevAqe = session.conf.get(AqeKey)
-    val prevParts = session.conf.get(PartsKey)
+    // the word-TYPE table the loop actually shuffles (~500k types per
+    // partition, capped at the session width): each round's pair-count
+    // groupBy carries |types|-bounded rows whatever the corpus size, so
+    // session-width rounds are near-empty tasks whose scheduling — plus
+    // AQE's per-round materialize-and-replan — dominates. The count() is
+    // cheap (post-checkpoint).
     val nTypes = syms.count()
-    val loopParts = scala.util.Try(prevParts.toLong).toOption
-      .map(p => math.max(1L, math.min(p, nTypes / 500000 + 1)).toString)
-    try {
-      session.conf.set(AqeKey, "false")
-      loopParts.foreach(session.conf.set(PartsKey, _))
+    ShuffleWidth.narrowed(docs.sparkSession, nTypes / 500000 + 1) { width =>
       // collapse the symbol table itself to the loop width once: it
       // arrives session-width from the word-count groupBy, and the
       // rewrite is row-local, so every one of the k checkpoints would
       // otherwise re-materialize session-width near-empty tasks
-      learnLoop(loopParts.map(p => syms.repartition(p.toInt)).getOrElse(syms), k)
-    } finally {
-      session.conf.set(AqeKey, prevAqe)
-      session.conf.set(PartsKey, prevParts)
+      learnLoop(width.map(w => syms.repartition(w)).getOrElse(syms), k)
     }
   }
 

@@ -106,37 +106,17 @@ object ConnectedComponents {
     val e = edges.select(col("id_a"), col("id_b"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nEdges = e.count()
-    val AqeKey = "spark.sql.adaptive.enabled"
-    val PartsKey = "spark.sql.shuffle.partitions"
-    val prevAqe = session.conf.get(AqeKey)
-    // Record the session's untouched width in the shared registry
-    // BEFORE the first conf.set: a concurrent stream's FIRST
-    // StreamOps.withBatchShuffleWidth call on this session must never
-    // capture this loop's transient narrow as the deployment default.
-    // The restore below still targets what THIS call found (prevParts),
-    // so nesting inside an already-narrowed StreamOps body composes.
-    graft.operators.ShuffleWidth.untouched(session)
-    val prevParts = session.conf.get(PartsKey)
     // With AQE opted out, the loop also sizes its own shuffle width from
     // the edge count the eager persist just measured (~500k edges per
     // partition, capped at the session width): a near-dup graph is tiny
     // relative to its corpus, and running every round as session-width
     // stages of near-empty tasks is pure scheduler overhead — measured
     // 3.5 s of the 4.5 s c1 total at sf0.1 under 32-partition rounds.
-    // A 100 TB-scale edge list keeps the session width unchanged.
-    // Everything fallible (the width parse included: some deployments set
-    // a non-numeric value like "auto") runs BEFORE the first conf.set, and
-    // both sets sit inside the try, so no failure path can leave the
-    // session with AQE off or a width-1 shuffle default.
-    val loopParts = scala.util.Try(prevParts.toLong).toOption
-      .map(p => math.max(1L, math.min(p, nEdges / 500000 + 1)).toString)
-    try {
-      session.conf.set(AqeKey, "false")
-      loopParts.foreach(session.conf.set(PartsKey, _))
+    // A 100 TB-scale edge list keeps the session width. Inside a
+    // narrowed wave body the cap is that body's width, and the scope
+    // restores it on return.
+    ShuffleWidth.narrowed(session, nEdges / 500000 + 1) { _ =>
       componentsLoop(e, maxRounds)
-    } finally {
-      session.conf.set(AqeKey, prevAqe)
-      session.conf.set(PartsKey, prevParts)
     }
   }
 

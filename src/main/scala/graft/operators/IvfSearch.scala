@@ -55,46 +55,6 @@ object IvfSearch {
     finally e.unpersist()
   }
 
-  /** Runs `body` with AQE off and a shuffle width sized to the Lloyd
-    * loop's OWN reduce state (the ConnectedComponents loop pattern):
-    * every exchange inside a Lloyd iteration carries only partially
-    * aggregated per-(centroid, dimension) means — at most
-    * mapPartitions·k·dim rows regardless of corpus size — so the
-    * session-wide shuffle width runs each round as stages of near-empty
-    * tasks whose scheduling dominates the round, and AQE's
-    * materialize-and-replan cycle per exchange adds more scheduling for
-    * shapes that are fixed and known. Width is derived from the cached
-    * projection's partition count (≈ bounded reduce bytes / 64 MB),
-    * never a constant: a 100 TB corpus with 100k scan partitions gets a
-    * proportionally wider reduce, and the session width is the cap.
-    * The heavy per-row work (k·dim distance terms per vector) lives in
-    * the MAP stages over the cached projection's partitioning, which
-    * this does not touch. Conf is save/restored exactly as the CC loop
-    * does (everything fallible runs before the first set). */
-  private[operators] def withTrainConf[T](e: DataFrame, k: Int)(body: => T): T = {
-    val session = e.sparkSession
-    val AqeKey = "spark.sql.adaptive.enabled"
-    val PartsKey = "spark.sql.shuffle.partitions"
-    graft.operators.ShuffleWidth.untouched(session)
-    val prevAqe = session.conf.get(AqeKey)
-    val prevParts = session.conf.get(PartsKey)
-    // reduce-state rows per exchange ≈ mapParts·k·dim (dim bounded at a
-    // conservative 1024): size partitions to ~64 MB of 24-byte entries
-    val mapParts = e.rdd.getNumPartitions.toLong
-    val loopParts = scala.util.Try(prevParts.toLong).toOption.map { p =>
-      math.max(1L, math.min(p,
-        mapParts * k * 1024L * 24L / (64L << 20) + 1L)).toString
-    }
-    try {
-      session.conf.set(AqeKey, "false")
-      loopParts.foreach(session.conf.set(PartsKey, _))
-      body
-    } finally {
-      session.conf.set(AqeKey, prevAqe)
-      session.conf.set(PartsKey, prevParts)
-    }
-  }
-
   /** Lloyd loop over an already-prepared (id, emb) projection whose
     * UPSTREAM the caller has persisted (either the projection itself, or
     * — as [[PqSearch.train]] does — one shared base the projection

@@ -63,10 +63,27 @@ object PqSearch {
       // cores the others leave idle (guide §2.6 — overlap independent
       // jobs). Each fit is the same deterministic Lloyd; assembling by
       // subspace index keeps the codebook order identical to the
-      // sequential form. The narrowed train conf wraps ALL fits once
-      // (set before the pool spawns, restored after every fit joined),
-      // so no thread ever races a conf save/restore.
-      val books = IvfSearch.withTrainConf(base, k) {
+      // sequential form.
+      //
+      // The fits run with AQE off and a shuffle width sized to the Lloyd
+      // loop's OWN reduce state: every exchange inside an iteration
+      // carries only partially aggregated per-(centroid, dimension)
+      // means — at most mapParts·k·dim rows regardless of corpus size —
+      // so session-width rounds are stages of near-empty tasks, and
+      // AQE's materialize-and-replan cycle per exchange adds more
+      // scheduling for shapes that are fixed and known. Reduce rows ≈
+      // mapParts·k·dim (dim bounded at a conservative 1024) are sized to
+      // ~64 MB of 24-byte entries per partition, so a 100 TB corpus with
+      // 100k scan partitions gets a proportionally wider reduce; the
+      // session width is the cap. The heavy per-row work (k·dim distance
+      // terms per vector) lives in the MAP stages over the cached base's
+      // partitioning, which this does not touch. One scope wraps ALL
+      // fits (narrowed before the pool spawns, restored after every fit
+      // joined); the pool threads only run fitPrepared, which never
+      // narrows, so they never wait on the scope's lock.
+      val mapParts = base.rdd.getNumPartitions.toLong
+      val books = ShuffleWidth.narrowed(base.sparkSession,
+          mapParts * k * 1024L * 24L / (64L << 20) + 1L) { _ =>
         val pool = java.util.concurrent.Executors.newFixedThreadPool(m)
         implicit val ec: scala.concurrent.ExecutionContext =
           scala.concurrent.ExecutionContext.fromExecutorService(pool)

@@ -31,24 +31,10 @@ object StreamOps {
 
   /** File-based streaming source over a directory of event parquet (one
     * file per micro-batch in tests; at scale this is the drop-zone
-    * pattern, schema pinned up front as required by readStream). Applies
-    * the same TIMESTAMP(NANOS) handling as `graft.Tables`: read the
-    * physical INT64 as nanos and integer-divide to microseconds. */
-  def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(dir).schema
-    val raw = spark.readStream.schema(schema).parquet(dir)
-    // same layout adaptivity as graft.Tables: INT64-nanos (pre-round-9
-    // testdata), TIMESTAMP_NTZ micros (round-9 on), or native timestamps
-    schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts",
-          expr("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => raw
-    }
-  }
+    * pattern, schema pinned up front as required by readStream), with
+    * the same `ts` layout handling as `graft.Tables`. */
+  def readEvents(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.events(spark, dir, stream = true)
 
   /** Streaming twin of `EventOps.e1WindowHourly`: tumbling 1-hour counts
     * per event type, 2-hour watermark bounds window state. */
@@ -1217,17 +1203,6 @@ object StreamOps {
     * state must not squeeze that state through a handful of tasks. */
   private val StateBytesPerPartition = 64L << 20
 
-  // The untouched session width lives in the shared weak-keyed
-  // [[graft.operators.ShuffleWidth]] registry (ConnectedComponents
-  // records there too, BEFORE its own unlocked narrow) — restores
-  // always target that value, so neither an interleaved save/restore
-  // across threads nor a first gate call racing a concurrent CC narrow
-  // can pin the session at a narrowed width.
-
-  /** JVM-wide guard for the narrowed region: taken ONLY when narrowing
-    * applies, so at-scale batches (which never narrow) never serialize. */
-  private object NarrowLock
-
   /** Auto-narrowed shuffle width for ONE micro-batch body, sized from
     * the batch's row count AND the at-rest state's byte size (the
     * larger wins — a 500-row batch sweeping against 100 GB of
@@ -1236,58 +1211,42 @@ object StreamOps {
     * session-width stages of near-empty tasks — pure scheduler
     * overhead, measured as the dominant cost of the c14/c17/a5 wave
     * family at sf0.1 — where [[graft.operators.ConnectedComponents]]
-    * already adapts its own loop. AQE is opted out INSIDE the narrowed
-    * region for the same reason CC opts out (per-shuffle-stage
-    * materialize-and-replan costs more than the narrow stages
-    * themselves at this size); when the derived width reaches the
-    * session width — every at-scale batch — NOTHING is touched: width,
-    * AQE, and plan behavior are exactly the untouched deployment
-    * configuration. The extra `count()` the callers pay prunes to one
-    * column and is noise next to the sweep itself. Nested narrowing
-    * (CC's loop inside a narrowed body) composes: each layer restores
-    * what it found.
+    * already adapts its own loop. The narrowed body runs in a
+    * [[graft.operators.ShuffleWidth.narrowed]] scope: AQE off (per-
+    * shuffle-stage materialize-and-replan costs more than the narrow
+    * stages themselves at this size), the scope's JVM lock held, and the
+    * width and AQE it found restored on every exit path. Nested
+    * narrowing (CC's loop inside a narrowed body) composes: the inner
+    * scope restores this one's width. The extra `count()` the callers
+    * pay prunes to one column and is noise next to the sweep itself.
     *
-    * Conf mutation is session-global, so the narrowed region holds a
-    * JVM lock and every restore targets the session's RECORDED
-    * untouched width — concurrent narrowing streams on one session
-    * serialize their (tiny) narrowed bodies and can never leave the
-    * session pinned narrow. A deployment running MIXED demo-scale and
-    * at-scale streams MUST give each stream its own `newSession()`
-    * (the standard per-stream-conf idiom); sharing one session there
-    * makes an at-scale batch observe a narrowed width for the duration
-    * of the other stream's narrowed body — a real throughput loss, not
-    * just a cosmetic race. */
+    * When the derived width reaches the session width — every at-scale
+    * batch — NOTHING is touched and the lock is not taken, so at-scale
+    * batches never serialize: width, AQE, and plan behavior are exactly
+    * the deployment configuration. That skip decision reads the session
+    * width without the lock, so under another thread's concurrent
+    * narrow the worst case is a mid-size body that sees the transient
+    * width, skips, and runs un-narrowed; a skipped body sets nothing, so
+    * it can never pin the session. A deployment running MIXED
+    * demo-scale and at-scale streams should still give each stream its
+    * own `newSession()` (the standard per-stream-conf idiom): on one
+    * shared session an at-scale batch observes a narrowed width for the
+    * duration of the other stream's narrowed body. */
   private[graft] def withBatchShuffleWidth[T](spark: SparkSession,
       rows: Long, statePath: String = "")(f: => T): T = {
-    val PartsKey = "spark.sql.shuffle.partitions"
-    val AqeKey = "spark.sql.adaptive.enabled"
-    val prevParts = graft.operators.ShuffleWidth.untouched(spark)
     val stateBytes = if (statePath.isEmpty) 0L else {
       val p = new org.apache.hadoop.fs.Path(statePath)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
     }
+    val want = math.max(rows / BatchRowsPerPartition + 1,
+      stateBytes / StateBytesPerPartition + 1)
     // non-numeric session width (some deployments set "auto") → leave
-    // the session untouched, exactly the CC guard
-    val narrowed = scala.util.Try(prevParts.toLong).toOption.flatMap { p =>
-      val w = math.max(
-        math.max(1L, math.min(p, rows / BatchRowsPerPartition + 1)),
-        math.min(p, stateBytes / StateBytesPerPartition + 1))
-      if (w >= p) None else Some(w.toString)
-    }
-    narrowed match {
-      case None => f
-      case Some(w) => NarrowLock.synchronized {
-        val prevAqe = spark.conf.get(AqeKey)
-        try {
-          spark.conf.set(PartsKey, w)
-          spark.conf.set(AqeKey, "false")
-          f
-        } finally {
-          spark.conf.set(PartsKey, prevParts)
-          spark.conf.set(AqeKey, prevAqe)
-        }
-      }
+    // the session untouched
+    graft.operators.ShuffleWidth.current(spark) match {
+      case Some(p) if want < p =>
+        graft.operators.ShuffleWidth.narrowed(spark, want)(_ => f)
+      case _ => f
     }
   }
 
@@ -2431,8 +2390,6 @@ object StreamOps {
       kAnonBatchImpl(batch, statePath, batchId)
     }
 
-  /** [[kAnonBatch]] without the width wrapper — the composed gate calls
-    * it inside its own already-narrowed region. */
   /** Schema of the accumulated k-anonymity class-count snapshots —
     * shared by the per-batch merge and [[kanonAsOf]]. */
   private val KanonSchema = new org.apache.spark.sql.types.StructType()
@@ -2446,6 +2403,8 @@ object StreamOps {
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], KanonSchema)
 
+  /** [[kAnonBatch]] without the width wrapper — the composed gate calls
+    * it inside its own already-narrowed region. */
   private def kAnonBatchImpl(batch: DataFrame, statePath: String,
       batchId: Long): DataFrame = {
     val spark = batch.sparkSession

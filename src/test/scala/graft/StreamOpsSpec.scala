@@ -2538,21 +2538,90 @@ class StreamOpsSpec extends AnyFunSuite {
     assert(spark.conf.get(AqeKey) == sessionAqe)
   }
 
-  test("first gate call during another component's narrow restores the " +
-      "recorded untouched width, never the transient one") {
-    val PartsKey = "spark.sql.shuffle.partitions"
+  private val PartsKey = "spark.sql.shuffle.partitions"
+  private val AqeKey = "spark.sql.adaptive.enabled"
+
+  test("concurrent narrowing scopes on one session each see their own " +
+      "width and leave the session as they found it") {
+    import graft.operators.ShuffleWidth
     val t = spark.newSession()
     t.conf.set(PartsKey, "8")
-    // ConnectedComponents records the untouched width in the shared
-    // registry BEFORE its first conf.set — replay that ordering, then
-    // simulate its in-flight narrow racing this session's FIRST
-    // withBatchShuffleWidth call
-    graft.operators.ShuffleWidth.untouched(t)
-    t.conf.set(PartsKey, "1")
-    StreamOps.withBatchShuffleWidth(t, 1L) { () }
-    // the restore targeted the RECORDED width: the session is repaired
-    // to 8, not pinned at the narrowed 1 it happened to show on entry
+    t.conf.set(AqeKey, "true")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // a batch-style scope (150k rows → width 2) against a CC-style one
+    // (width 5): the batch scope's unlocked skip read never skips, since
+    // 2 is below both the session's 8 and the other scope's 5. Each body
+    // sleeps before it reads, so unlocked scopes would interleave.
+    def batchScope(): Unit = StreamOps.withBatchShuffleWidth(t, 150000L) {
+      Thread.sleep(1)
+      val got = (t.conf.get(PartsKey), t.conf.get(AqeKey))
+      if (got != (("2", "false"))) seen.add(s"batch saw $got")
+    }
+    def ccScope(): Unit = ShuffleWidth.narrowed(t, 5L) { w =>
+      Thread.sleep(1)
+      val got = (w, t.conf.get(PartsKey), t.conf.get(AqeKey))
+      if (got != ((Some(5), "5", "false"))) seen.add(s"cc saw $got")
+    }
+    // one warm call each first, so class loading cannot hold one thread
+    // back until the other has finished
+    batchScope(); ccScope()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val threads = Seq[() => Unit](batchScope _, ccScope _).map { scope =>
+      new Thread(() =>
+        try { start.await(); (1 to 50).foreach(_ => scope()) }
+        catch { case e: Throwable => seen.add(e.toString); () })
+    }
+    threads.foreach(_.start())
+    start.countDown()
+    threads.foreach(_.join())
+    assert(seen.isEmpty, seen.toArray.mkString("; "))
     assert(t.conf.get(PartsKey) == "8")
+    assert(t.conf.get(AqeKey) == "true")
+  }
+
+  test("a nested narrowing scope sees the smaller width and restores " +
+      "the enclosing scope's") {
+    import graft.operators.ShuffleWidth
+    val t = spark.newSession()
+    t.conf.set(PartsKey, "8")
+    val aqe = t.conf.get(AqeKey)
+    StreamOps.withBatchShuffleWidth(t, 250000L) { // width 3
+      // CC inside a wave body: the inner cap is the outer width
+      ShuffleWidth.narrowed(t, 6L) { w => assert(w.contains(3)) }
+      ShuffleWidth.narrowed(t, 1L) { w =>
+        assert(w.contains(1))
+        assert(t.conf.get(PartsKey) == "1")
+      }
+      assert(t.conf.get(PartsKey) == "3")
+      assert(t.conf.get(AqeKey) == "false")
+    }
+    assert(t.conf.get(PartsKey) == "8")
+    assert(t.conf.get(AqeKey) == aqe)
+  }
+
+  test("an application width change between two narrowing scopes " +
+      "survives the second") {
+    val t = spark.newSession()
+    t.conf.set(PartsKey, "8")
+    StreamOps.withBatchShuffleWidth(t, 1L) { () }
+    t.conf.set(PartsKey, "16")
+    StreamOps.withBatchShuffleWidth(t, 1L) {
+      assert(t.conf.get(PartsKey) == "1")
+    }
+    assert(t.conf.get(PartsKey) == "16",
+      "restore reverted a deliberate application width change")
+  }
+
+  test("a throwing narrowed body restores width and AQE") {
+    val t = spark.newSession()
+    t.conf.set(PartsKey, "8")
+    t.conf.set(AqeKey, "true")
+    val e = intercept[RuntimeException] {
+      graft.operators.ShuffleWidth.narrowed(t, 2L)(_ => sys.error("boom"))
+    }
+    assert(e.getMessage == "boom")
+    assert(t.conf.get(PartsKey) == "8")
+    assert(t.conf.get(AqeKey) == "true")
   }
 
   test("maintain-while-serving: a reader resolved before the maintenance " +
@@ -2713,21 +2782,6 @@ class StreamOpsSpec extends AnyFunSuite {
     } finally {
       graft.sources.Sources.deleteRecursively(new java.io.File(root))
     }
-  }
-
-  test("ShuffleWidth.invalidate lets a deliberate application width change " +
-      "survive later graft restores") {
-    val PartsKey = "spark.sql.shuffle.partitions"
-    val t = spark.newSession()
-    t.conf.set(PartsKey, "8")
-    StreamOps.withBatchShuffleWidth(t, 1L) { () } // records 8, restores 8
-    // the application re-sizes the session on purpose; without
-    // invalidate the next restore would silently revert to the stale 8
-    t.conf.set(PartsKey, "16")
-    graft.operators.ShuffleWidth.invalidate(t)
-    StreamOps.withBatchShuffleWidth(t, 1L) { () }
-    assert(t.conf.get(PartsKey) == "16",
-      "restore reverted a deliberate application width change")
   }
 
   test("rolling span dedup: per-frontier serves equal the one-shot d48, " +

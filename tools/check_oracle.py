@@ -28,6 +28,10 @@ CORRECTNESS artifact landed empty two rounds running):
                 the belt-and-braces evidence copy committed per round while
                 the driver-side artifact chain is unreliable.
 
+Every result line ends with the query's time split: seconds loading
+Spark's output, running the DuckDB oracle SQL, and in canon plus the
+compare. The run ends with the ten slowest queries by total time.
+
 Strictness (round 2): the round-1 version allowed 1e-9 relative tolerance
 and type-insensitive string compare, which reported "ALL OK" while the
 driver's hash compare failed 12 DECIMAL-typed queries. The compare is now
@@ -42,6 +46,7 @@ representation-exact, modeled on a canonical-string hasher:
 import json
 import math
 import sys
+import time
 
 import duckdb
 import pandas as pd
@@ -89,6 +94,7 @@ def main(out_dir: str, sf_dir: str, use_hints: bool = False,
     setups_done = set()
     report = {}
     n_fail = 0
+    timings = {}  # name -> (load_s, oracle_s, compare_s)
 
     def record(name, rows=True, schema=True, values=True, err=None):
         report[name] = {"rows_match": rows, "schema_match": schema,
@@ -96,35 +102,51 @@ def main(out_dir: str, sf_dir: str, use_hints: bool = False,
                         "err": err}
 
     for name, sql in sorted(oracle.items()):
+        t_load = t_oracle = t_compare = 0.0
+
+        def split():
+            timings[name] = (t_load, t_oracle, t_compare)
+            return (f"  [load {t_load:.2f}s oracle {t_oracle:.2f}s "
+                    f"compare {t_compare:.2f}s]")
+
         if name in hints:
             h = hints[name]
             if h["setup"] not in setups_done:
                 con.execute(h["setup"])
                 setups_done.add(h["setup"])
             sql = h["sql"]
+        t0 = time.perf_counter()
         try:
             got = con.sql(
                 f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df()
+            t_load = time.perf_counter() - t0
+            t0 = time.perf_counter()
             want = con.sql(sql).df()
+            t_oracle = time.perf_counter() - t0
         except Exception as e:
-            print(f"FAIL {name}: load/exec error: {e}")
+            print(f"FAIL {name}: load/exec error: {e}{split()}")
             record(name, rows=False, schema=False, values=False, err=str(e))
             n_fail += 1
             continue
+        t0 = time.perf_counter()
         g, w = canon(got), canon(want)
         if list(g.columns) != list(w.columns):
-            print(f"FAIL {name}: columns {list(g.columns)} != {list(w.columns)}")
+            t_compare = time.perf_counter() - t0
+            print(f"FAIL {name}: columns {list(g.columns)} != "
+                  f"{list(w.columns)}{split()}")
             record(name, schema=False, values=False)
             n_fail += 1
             continue
         if [str(t) for t in g.dtypes] != [str(t) for t in w.dtypes]:
+            t_compare = time.perf_counter() - t0
             print(f"FAIL {name}: dtypes {list(map(str, g.dtypes))} "
-                  f"!= {list(map(str, w.dtypes))}")
+                  f"!= {list(map(str, w.dtypes))}{split()}")
             record(name, schema=False, values=False)
             n_fail += 1
             continue
         if len(g) != len(w):
-            print(f"FAIL {name}: rows {len(g)} != {len(w)}")
+            t_compare = time.perf_counter() - t0
+            print(f"FAIL {name}: rows {len(g)} != {len(w)}{split()}")
             record(name, rows=False, values=False)
             n_fail += 1
             continue
@@ -137,16 +159,23 @@ def main(out_dir: str, sf_dir: str, use_hints: bool = False,
                     break
             if bad:
                 break
+        t_compare = time.perf_counter() - t0
         if bad:
             c, i, x, y = bad
             print(f"FAIL {name}: col {c} row {i}: "
                   f"spark={x!r} ({type(x).__name__}) "
-                  f"duck={y!r} ({type(y).__name__})")
+                  f"duck={y!r} ({type(y).__name__}){split()}")
             record(name, values=False)
             n_fail += 1
         else:
-            print(f"OK   {name}: {len(g)} rows x {len(g.columns)} cols")
+            print(f"OK   {name}: {len(g)} rows x {len(g.columns)} cols"
+                  f"{split()}")
             record(name)
+    slowest = sorted(timings.items(), key=lambda kv: -sum(kv[1]))[:10]
+    print("slowest queries (total = load + oracle + compare):")
+    for name, (a, b, c) in slowest:
+        print(f"  {a + b + c:8.2f}s  {name}  "
+              f"[load {a:.2f}s oracle {b:.2f}s compare {c:.2f}s]")
     if emit:
         with open(emit, "w") as f:
             json.dump(report, f, indent=1, sort_keys=True)
