@@ -27,5 +27,6 @@ object SparkEntry extends QueryFamily {
     * per query whose oracle shares an expensive CTE chain. Local
     * tooling only (`tools/check_oracle.py --use-hints`); the driver's
     * compare reads the self-contained `oracleSql`. */
-  def oracleHints: Map[String, (String, String)] = PipelineOps.oracleHints
+  def oracleHints: Map[String, (String, String)] =
+    PipelineOps.oracleHints ++ CorpusOps.oracleHints
 }

@@ -416,7 +416,7 @@ object CorpusOps extends QueryFamily {
     * ppm, every later frontier seeds from the previous frontier's
     * final scores (new vertices at 1M), [[PrIters]] g1-exact integer
     * iterations each. */
-  private lazy val g2Sql: String = {
+  private lazy val g2Tail: String = {
     def edges(n: Int): String =
       s"""f$n AS (
          |  SELECT id_a, id_b FROM fpairs
@@ -450,9 +450,7 @@ object CorpusOps extends QueryFamily {
     def sel(n: Int): String =
       s"""SELECT CAST($n AS BIGINT) AS as_of, id AS doc_id,
          |  CAST(pr AS BIGINT) AS pr_ppm FROM s${n}_$PrIters""".stripMargin
-    s"""WITH ${ScaleOps.m1PairsCtesAt(NearDupThreshold,
-           s"WHERE doc_id >= $EvalSplit AND doc_id < $G2StreamEnd")},
-       |${chain(0)},
+    s"""${chain(0)},
        |${chain(1)},
        |${chain(2)}
        |${sel(1)}
@@ -460,6 +458,22 @@ object CorpusOps extends QueryFamily {
        |${sel(2)}
        |ORDER BY as_of, pr_ppm DESC, doc_id""".stripMargin
   }
+
+  private lazy val g2PairCtes: String = ScaleOps.m1PairsCtesAt(NearDupThreshold,
+    s"WHERE doc_id >= $EvalSplit AND doc_id < $G2StreamEnd")
+
+  private lazy val g2Sql: String = s"WITH $g2PairCtes,\n$g2Tail"
+
+  /** Oracle materialization hint for g2 (the [[PipelineOps.oracleHints]]
+    * form): DuckDB re-inlines the m1 pair chain into every reference of
+    * `fpairs` across the three frontier chains, so the setup pins
+    * `fpairs` to a temp table and the served SQL replays the IDENTICAL
+    * chain text over it. */
+  lazy val oracleHints: Map[String, (String, String)] = Map(
+    "g2_rolling_pagerank" -> (
+      s"CREATE OR REPLACE TEMP TABLE graft_g2_fpairs AS WITH $g2PairCtes " +
+        "SELECT * FROM fpairs",
+      s"WITH fpairs AS (SELECT * FROM graft_g2_fpairs),\n$g2Tail"))
 
   /** DuckDB replay of [[ConnectedComponents]] over the m1 pair set
     * (optionally restricted by `where` — c14 clusters only the corpus ∪
@@ -840,7 +854,7 @@ object CorpusOps extends QueryFamily {
       .filter(col("doc_id") >= EvalSplit && col("doc_id") < C9CorpusEnd)
       .select(col("doc_id"))
     // every metric reads the AT-REST state the waves landed; snapshot
-    // selection is the DIRECTORY-listing rule (latestLandedBatch), not
+    // selection is the DIRECTORY-listing rule (StreamOps.latestSnapshot), not
     // a row-level max — an empty final frontier lands a data-file-less
     // partition that a row max would silently skip for the prior epoch
     def latest(name: String): DataFrame =

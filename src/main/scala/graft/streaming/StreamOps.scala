@@ -4,8 +4,10 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.{DataType, DecimalType, LongType}
+
+import StateCatalog._
 
 /** Structured Streaming ingestion path over the events stream (north-star
   * extension, SURVEY §2.9/§7.2 phase 7 — the reference has no streaming;
@@ -735,6 +737,17 @@ object StreamOps {
       }
   }
 
+  /** The one foreachBatch driver every per-batch face runs through: the
+    * body sees each micro-batch as a plain DataFrame with its epoch id.
+    * With a `checkpoint` the query restarts where it stopped, and the
+    * body's batch_id-partitioned lands make a replayed epoch idempotent. */
+  private def eachBatch(docs: DataFrame, checkpoint: Option[String])
+      (body: (DataFrame, Long) => Unit): StreamingQuery = {
+    val w = docs.writeStream
+    checkpoint.fold(w)(w.option("checkpointLocation", _))
+      .foreachBatch(body).start()
+  }
+
   /** Streaming → ANN composition (foreachBatch): enrich each micro-batch
     * of events with a static (user_id → embedding) dimension, then probe
     * the hyperplane-LSH index for each event's top-k cosine neighbors in
@@ -751,17 +764,14 @@ object StreamOps {
     * batchId (idempotent overwrite per epoch is the standard pattern). */
   def annPerBatch(events: DataFrame, userEmb: DataFrame, corpus: DataFrame,
                   k: Int, idCol: String = "vec_id", embCol: String = "embedding")
-                 (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val probes = enrich(batch, userEmb, "user_id")
-          .filter(col(embCol).isNotNull)
-          .select(col("event_id").as(idCol), col(embCol))
-        sink(graft.operators.AnnSearch.approxTopK(probes, corpus, idCol, embCol, k),
-          batchId)
-      }
-      .start()
+                 (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    eachBatch(events, None) { (batch, batchId) =>
+      val probes = enrich(batch, userEmb, "user_id")
+        .filter(col(embCol).isNotNull)
+        .select(col("event_id").as(idCol), col(embCol))
+      sink(graft.operators.AnnSearch.approxTopK(probes, corpus, idCol, embCol, k),
+        batchId)
+    }
 
   /** Streaming → decontamination composition (foreachBatch): sweep each
     * arriving micro-batch of documents against a static held-out eval
@@ -778,14 +788,11 @@ object StreamOps {
     * report (clean batches produce an empty frame). */
   def decontaminatePerBatch(docs: DataFrame, evalSet: DataFrame,
                             idCol: String, textCol: String, n: Int = 5)
-                           (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.operators.Decontaminate
-          .contamination(batch, evalSet, idCol, textCol, n), batchId)
-      }
-      .start()
+                           (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    eachBatch(docs, None) { (batch, batchId) =>
+      sink(graft.operators.Decontaminate
+        .contamination(batch, evalSet, idCol, textCol, n), batchId)
+    }
 
   /** Streaming → near-dup composition (foreachBatch): sweep each arriving
     * micro-batch of documents against the existing corpus with the
@@ -809,21 +816,18 @@ object StreamOps {
   def nearDupPerBatch(docs: DataFrame, corpus: DataFrame,
                       idCol: String, textCol: String, threshold: Double,
                       validateDisjoint: Boolean = true)
-                     (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // release the per-call band-table caches after the sink consumes
-        // the result — a long-running stream must not accumulate a pair
-        // of caches per batch (and clearing the WHOLE shared cache would
-        // nuke caller-owned tables)
-        val (pairs, caches) = graft.operators.MinHashDedup
-          .nearDuplicatesAgainstWithCaches(corpus, batch, idCol, textCol,
-            threshold, validateDisjoint)
-        try sink(pairs, batchId)
-        finally caches.foreach(_.unpersist())
-      }
-      .start()
+                     (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    eachBatch(docs, None) { (batch, batchId) =>
+      // release the per-call band-table caches after the sink consumes
+      // the result — a long-running stream must not accumulate a pair
+      // of caches per batch (and clearing the WHOLE shared cache would
+      // nuke caller-owned tables)
+      val (pairs, caches) = graft.operators.MinHashDedup
+        .nearDuplicatesAgainstWithCaches(corpus, batch, idCol, textCol,
+          threshold, validateDisjoint)
+      try sink(pairs, batchId)
+      finally caches.foreach(_.unpersist())
+    }
 
   /** End-to-end streaming ingest gate — the BASELINE "Structured
     * Streaming for integration" composition as ONE checkpointed query:
@@ -848,15 +852,11 @@ object StreamOps {
   def ingestPipeline(docs: DataFrame, corpus: DataFrame, evalSet: DataFrame,
                      idCol: String, textCol: String, threshold: Double,
                      outPath: String, checkpoint: String, n: Int = 5,
-                     validateDisjoint: Boolean = true)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, corpus, evalSet, idCol, textCol, threshold,
-          n, outPath, batchId, validateDisjoint)
-      }
-      .start()
+                     validateDisjoint: Boolean = true): StreamingQuery =
+    eachBatch(docs, Some(checkpoint)) { (batch, batchId) =>
+      ingestBatch(batch, corpus, evalSet, idCol, textCol, threshold,
+        n, outPath, batchId, validateDisjoint)
+    }
 
   /** One micro-batch of [[ingestPipeline]] — package-visible so the spec
     * can force a REPLAY of an already-committed batchId and assert the
@@ -884,11 +884,7 @@ object StreamOps {
         .select(col("id"))
       val clean = deduped.join(contaminated,
         deduped(idCol) === contaminated("id"), "left_anti")
-      clean.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(outPath)
+      landDelta(clean, outPath, batchId)
     } finally caches.foreach(_.unpersist())
   }
 
@@ -933,164 +929,23 @@ object StreamOps {
       staticCorpusIds: DataFrame, evalSet: DataFrame,
       idCol: String, textCol: String, threshold: Double,
       outPath: String, statePath: String, checkpoint: String, n: Int = 5)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatchCompact(batch, staticIndex, staticCorpusIds, evalSet,
-          idCol, textCol, threshold, n, outPath, statePath, batchId)
-      }
-      .start()
-
-  /** State-path existence via the Hadoop FileSystem API — resolves the
-    * path's own scheme (file://, hdfs://, s3a://, …). A bare
-    * `java.io.File` probe is ALWAYS false for non-local URIs, which
-    * would silently read the accumulated index as empty: cross-batch
-    * near-dups would pass the gate and compaction would no-op — silent
-    * wrongness at exactly the 100 TB deployment posture this module
-    * documents. */
-  private def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** True iff `path` holds at least one parquet DATA file (recursive).
-    * A delta directory can EXIST while holding no data — e.g. only
-    * empty batches have landed — and a schema-less read of it fails
-    * with an opaque 'Unable to infer schema' instead of the caller's
-    * intended error; serving paths that cannot supply an explicit
-    * schema (the id type is the writer's) probe this first. */
-  private def hasParquetData(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return false
-    val it = fs.listFiles(p, true)
-    var found = false
-    while (!found && it.hasNext) {
-      val f = it.next()
-      val n = f.getPath.getName
-      found = f.getLen > 0 && n.endsWith(".parquet") && !n.startsWith("_") &&
-        !n.startsWith(".")
+      : StreamingQuery =
+    eachBatch(docs, Some(checkpoint)) { (batch, batchId) =>
+      ingestBatchCompact(batch, staticIndex, staticCorpusIds, evalSet,
+        idCol, textCol, threshold, n, outPath, statePath, batchId)
     }
-    found
-  }
 
-  /** Read a batch_id-partitioned parquet delta that may not exist yet
-    * (first batch) — the explicit schema makes an absent or empty
-    * directory an empty frame instead of a schema-inference error. */
-  private def readDelta(spark: SparkSession, path: String,
-                        schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val full = schema.add("batch_id", org.apache.spark.sql.types.LongType)
-    if (pathExists(spark, path)) spark.read.schema(full).parquet(path)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full)
-  }
-
-  /** Largest landed `batch_id=<n>` partition strictly below `before`, by
-    * Hadoop-FS directory listing — metadata-only, never a row scan. */
-  private def latestLandedBatch(spark: SparkSession, path: String,
-                                before: Long): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    fs.listStatus(p).iterator
-      .filter(_.isDirectory)
-      .flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("batch_id=")) n.stripPrefix("batch_id=").toLongOption
-        else None
-      }
-      .filter(_ < before)
-      .maxOption
-  }
-
-  /** Retention for SUPERSEDED snapshot state: [[rollingCcBatch]] lands
-    * the FULL label table each wave, so every `batch_id=` partition
-    * below the newest two is 100% superseded data — at thousands of
-    * waves that is unbounded at-rest growth (and an ever-longer
-    * directory listing) for rows no read path can ever choose. Keeps the
-    * `keep` largest partitions and deletes the rest. Runs AFTER the new
-    * land succeeds: a crash mid-prune leaves EXTRA partitions (harmless
-    * — reads pick the latest), never missing ones. The default keep=2
-    * (latest + previous) preserves replay safety: Structured Streaming
-    * only ever replays the newest uncommitted batch, whose read is the
-    * latest partition strictly below it — exactly the second survivor.
-    * NOT for append-only deltas (pair logs, IVF assignments) — those are
-    * data, not snapshots; their growth is bounded by [[Sources
-    * .compactParquet]] instead (see [[compactIvfAssignDeltas]]). */
-  private[graft] def pruneSupersededBatches(spark: SparkSession,
-      path: String, keep: Int = 2): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return
-    fs.listStatus(p).iterator
-      .filter(_.isDirectory)
-      .flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("batch_id="))
-          n.stripPrefix("batch_id=").toLongOption.map(_ -> st.getPath)
-        else None
-      }
-      .toSeq.sortBy(-_._1).drop(keep)
-      .foreach { case (_, dir) => fs.delete(dir, true) }
-  }
-
-  /** The latest landed snapshot of a whole state family, selected by
-    * the partition DIRECTORY listing ([[latestLandedBatch]]'s rule,
-    * shared with the as-of readers) — never a row-level max, which
-    * would both scan every surviving wave and silently skip a
-    * legitimately-EMPTY frontier ([[landSnapshot]] materializes a
-    * data-file-less `batch_id=` dir precisely so the listing sees it).
-    * For at-rest metric reads over a finished stream's state. */
+  /** The latest landed snapshot of a state table at `path`, selected by
+    * the partition directory listing (the [[StateCatalog]] snapshot
+    * rule), with its `batch_id` column. For at-rest metric reads over a
+    * finished stream's state. */
   private[graft] def latestSnapshot(spark: SparkSession,
       path: String): DataFrame = {
-    val last = latestLandedBatch(spark, path, Long.MaxValue).getOrElse(
+    val last = landedBatches(spark, path).maxOption.getOrElse(
       throw new IllegalStateException(
         s"latestSnapshot: no landed batch_id= partition under $path"))
     spark.read.parquet(path).filter(col("batch_id").cast("long") === last)
   }
-
-  /** The latest landed snapshot strictly below `batchId`, or `seed` on
-    * a cold start — the ONE snapshot-selection rule every rolling state
-    * family shares (labels, representatives, sem labels, k-anon counts,
-    * BM25 stats). The latest batch id comes from the partition
-    * DIRECTORY listing (pure metadata; a row-level max would scan every
-    * wave), and the read partition-prunes to the chosen directory. */
-  private def latestSnapshotOr(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType,
-      seed: => DataFrame, batchId: Long): DataFrame =
-    latestLandedBatch(spark, path, batchId) match {
-      case None => seed
-      case Some(last) => readDelta(spark, path, schema)
-        .filter(col("batch_id") === last).drop("batch_id")
-    }
-
-  /** [[landDelta]] for SNAPSHOT families with as-of readers (labels,
-    * rep): dynamic overwrite of an EMPTY frame writes no partition at
-    * all, which would make a legitimately-empty frontier look exactly
-    * like a pruned one to [[labelsAsOf]]/[[repAsOf]]'s loud check — so
-    * the `batch_id=` directory is materialized even when the snapshot
-    * is empty (partition listing sees it; a data-file-less partition
-    * reads as zero rows under the explicit schema; replay mkdir is
-    * idempotent). */
-  private def landSnapshot(df: DataFrame, path: String, batchId: Long): Unit = {
-    landDelta(df, path, batchId)
-    val part = new org.apache.hadoop.fs.Path(s"$path/batch_id=$batchId")
-    val fs = part.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    if (!fs.exists(part)) fs.mkdirs(part)
-  }
-
-  /** Land a batch-scoped delta: batch_id-partitioned with dynamic
-    * partition overwrite, so a checkpoint replay rewrites its own
-    * partition instead of appending a duplicate. */
-  private def landDelta(df: DataFrame, path: String, batchId: Long): Unit =
-    graft.operators.JobLabel(df.sparkSession,
-      s"land ${path.split('/').takeRight(1).mkString} b=$batchId") {
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
-    }
 
   /** The per-batch invariant every versioned rolling index shares: a doc
     * id appearing twice in ONE batch would mix both versions' rows in
@@ -1110,63 +965,53 @@ object StreamOps {
   /** Supersede-on-land shared by the versioned rolling indexes (BM25
     * postings, positional postings) — the Lucene delete-bitmap move:
     * each batch doc's previous LIVE version (its largest earlier
-    * `docsPath` delta row not already tombstoned — exactly one by
-    * induction, max kept as a defensive tie-break) dies now:
-    * tombstoned at `tombsPath` as (id, dead_batch), then the batch's
-    * own doc rows land at `docsPath`. Returns the superseded
-    * (id, dead_batch[, dead_<payload>…]) frame for callers that must
+    * `docs` row not already tombstoned — exactly one by induction, max
+    * kept as a defensive tie-break) dies now: tombstoned in `tombs` as
+    * (id, dead_batch), then the batch's own doc rows land in `docs`.
+    * Returns the superseded (id, dead_batch[, dead_<payload>…]) frame,
+    * payload being `docs`' columns after `id`, for callers that must
     * subtract per-version aggregates (BM25's corpus scalars). The frame
     * is consumed again after the tombstone land and must not lazily
     * re-read state mid-write — checkpointed eagerly. Replay-safe: both
     * lands are batch_id-partitioned dynamic overwrites, and a replayed
     * batch recomputes the same superseded set (its own earlier land is
     * excluded by `batch_id < batchId`). */
-  private def supersedeOnLand(spark: SparkSession,
-      idType: org.apache.spark.sql.types.DataType, docRows: DataFrame,
-      docsPath: String, tombsPath: String, batchId: Long,
-      payload: Seq[(String, org.apache.spark.sql.types.DataType)]): DataFrame = {
-    val docSchema = payload.foldLeft(
-      new org.apache.spark.sql.types.StructType().add("id", idType)) {
-      case (st, (n, t)) => st.add(n, t)
-    }
-    val tsSchema = new org.apache.spark.sql.types.StructType()
-      .add("id", idType)
-      .add("dead_batch", org.apache.spark.sql.types.LongType)
-    val deadSchema = payload.foldLeft(tsSchema) {
-      case (st, (n, t)) => st.add(s"dead_$n", t)
-    }
-    def emptySuperseded = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], deadSchema)
+  private def supersedeOnLand(spark: SparkSession, idType: DataType,
+      docRows: DataFrame, docs: Table, tombs: Table, statePath: String,
+      batchId: Long): DataFrame = {
+    val payload = docs.schema(idType).fieldNames.toSeq.tail
     // mostly-new-docs fast path: with nothing landed before this batch
     // (the common 100 TB shape — and always wave 0) there is nothing to
     // supersede, so skip the join/checkpoint/tombstone jobs entirely;
     // the per-batch overhead of update support must be ~zero when no
     // doc is updated
-    if (!hasParquetData(spark, docsPath)) {
-      landDelta(docRows, docsPath, batchId)
-      return emptySuperseded
+    if (!docs.hasData(spark, statePath)) {
+      docs.land(docRows, statePath, batchId)
+      val dead = docs.schema(idType).fields.tail.foldLeft(tombs.schema(idType)) {
+        (st, f) => st.add(s"dead_${f.name}", f.dataType)
+      }
+      return spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dead)
     }
-    val earlier = readDelta(spark, docsPath, docSchema)
+    val earlier = docs.read(spark, statePath, idType)
       .filter(col("batch_id") < batchId)
-    val earlierTombs = readDelta(spark, tombsPath, tsSchema)
-      .filter(col("batch_id") < batchId)
-      .select(col("id"), col("dead_batch"))
+    val earlierTombs = tombs.before(spark, statePath, batchId, idType)
     val superseded = earlier
       .join(earlierTombs,
         earlier("id") === earlierTombs("id") &&
           earlier("batch_id") === earlierTombs("dead_batch"), "left_anti")
       .join(docRows.select(col("id")), Seq("id"), "left_semi")
       .groupBy(col("id"))
-      .agg(max(struct(col("batch_id") +: payload.map(p => col(p._1)): _*)).as("v"))
+      .agg(max(struct(col("batch_id") +: payload.map(col): _*)).as("v"))
       .select(col("id") +: col("v.batch_id").as("dead_batch") +:
-        payload.map(p => col(s"v.${p._1}").as(s"dead_${p._1}")): _*)
+        payload.map(p => col(s"v.$p").as(s"dead_$p")): _*)
       .localCheckpoint()
     // an all-new batch landed nothing to tombstone — skip the write (a
     // replay recomputes the same empty set, so the skip is idempotent)
     if (superseded.head(1).nonEmpty)
-      landDelta(superseded.select(col("id"), col("dead_batch")),
-        tombsPath, batchId)
-    landDelta(docRows, docsPath, batchId)
+      tombs.land(superseded.select(col("id"), col("dead_batch")),
+        statePath, batchId)
+    docs.land(docRows, statePath, batchId)
     superseded
   }
 
@@ -1175,14 +1020,14 @@ object StreamOps {
     * log is bounded by re-ingests since the last segment merge, so it
     * broadcasts; with no tombstones landed this is a no-op. */
   private def dropDeadVersions(spark: SparkSession, probed: DataFrame,
-      tombsPath: String, asOf: Long): DataFrame =
-    if (!hasParquetData(spark, tombsPath)) probed
+      tombLog: Table, statePath: String, asOf: Long): DataFrame =
+    if (!tombLog.hasData(spark, statePath)) probed
     else {
       // a tombstone's OWN partition batch_id is the batch that landed the
       // superseding version — time-travel must ignore tombstones from the
       // served point's future (the old version was still live then)
-      val tombs = spark.read.parquet(tombsPath)
-        .filter(col("batch_id").cast("long") <= asOf)
+      val tombs = tombLog.through(spark, statePath, asOf,
+          probed.schema("id").dataType)
         .select(col("id").as("t_id"), col("dead_batch"))
       probed.join(broadcast(tombs),
         probed("id") === col("t_id") &&
@@ -1262,25 +1107,14 @@ object StreamOps {
       statePath: String, batchId: Long,
       validateDisjoint: Boolean = true): DataFrame = {
     import graft.operators.MinHashDedup
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
     val spark = batch.sparkSession
-    // delta schemas mirror sweepAgainstIndex's delta frames exactly;
     // the id column keeps the batch's own id type
     val idType = batch.schema(idCol).dataType
-    val bandsSchema = new StructType()
-      .add("id", idType).add("band", IntegerType).add("sig", StringType)
-    val shSchema = new StructType().add("id", idType).add("sh", LongType)
-    val sizesSchema = new StructType().add("id", idType).add("sz", LongType)
-    val seenBands = readDelta(spark, s"$statePath/bands", bandsSchema)
-      .filter(col("batch_id") < batchId).drop("batch_id")
-    val seenSh = readDelta(spark, s"$statePath/shingles", shSchema)
-      .filter(col("batch_id") < batchId).drop("batch_id")
-    val seenSizes = readDelta(spark, s"$statePath/sizes", sizesSchema)
-      .filter(col("batch_id") < batchId).drop("batch_id")
+    def seen(t: Table) = t.before(spark, statePath, batchId, idType)
     val corpusIndex = MinHashDedup.DedupIndex(
-      staticIndex.bands.unionByName(seenBands),
-      staticIndex.shingleHashes.unionByName(seenSh),
-      staticIndex.sizes.unionByName(seenSizes))
+      staticIndex.bands.unionByName(seen(Bands)),
+      staticIndex.shingleHashes.unionByName(seen(Shingles)),
+      staticIndex.sizes.unionByName(seen(Sizes)))
     graft.operators.JobLabel(spark, s"sweep b=$batchId") {
     val sweep = MinHashDedup.sweepAgainstIndex(corpusIndex, batch,
       idCol, textCol, threshold, validateDisjoint)
@@ -1297,10 +1131,10 @@ object StreamOps {
       // paths), and concurrent recaches of one cache entry corrupt the
       // scan/reader pairing (measured: parallel lands made wave-2 reads
       // throw ParquetFileFormat's partitionValues arity assertion)
-      landDelta(pairs, s"$statePath/pairs", batchId)
-      landDelta(sweep.delta.bands, s"$statePath/bands", batchId)
-      landDelta(sweep.delta.shingleHashes, s"$statePath/shingles", batchId)
-      landDelta(sweep.delta.sizes, s"$statePath/sizes", batchId)
+      Pairs.land(pairs, statePath, batchId)
+      Bands.land(sweep.delta.bands, statePath, batchId)
+      Shingles.land(sweep.delta.shingleHashes, statePath, batchId)
+      Sizes.land(sweep.delta.sizes, statePath, batchId)
     } finally sweep.caches.foreach(_.unpersist())
     pairs
     }
@@ -1361,19 +1195,15 @@ object StreamOps {
       staticIndex: graft.operators.MinHashDedup.DedupIndex,
       sources: DataFrame, idCol: String, textCol: String,
       threshold: Double, statePath: String, checkpoint: String)
-      (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        withBatchShuffleWidth(batch.sparkSession, batch.count(), statePath) {
-          val pairs = sweepBatchAccum(batch, staticIndex, idCol, textCol,
-            threshold, statePath, batchId)
-          try sink(rollupSourcePairs(pairs, sources, idCol), batchId)
-          finally pairs.unpersist()
-        }
+      (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    eachBatch(docs, Some(checkpoint)) { (batch, batchId) =>
+      withBatchShuffleWidth(batch.sparkSession, batch.count(), statePath) {
+        val pairs = sweepBatchAccum(batch, staticIndex, idCol, textCol,
+          threshold, statePath, batchId)
+        try sink(rollupSourcePairs(pairs, sources, idCol), batchId)
+        finally pairs.unpersist()
       }
-      .start()
+    }
 
   /** c7's rollup shape over an arbitrary pair frame. */
   private[graft] def rollupSourcePairs(pairs: DataFrame, sources: DataFrame,
@@ -1402,32 +1232,28 @@ object StreamOps {
     * clustering of everything arrived (the c13/c14 identity,
     * oracle-checked as c14).
     *
-    * Label state lands at `statePath/labels` batch_id-partitioned (the
-    * full table per batch — the star set IS the CC state, so landing it
-    * is the checkpoint; dynamic partition overwrite keeps a checkpoint
-    * replay idempotent, and each batch reads only the LATEST landed
-    * table of batches < batchId, so a replayed batch cannot see its own
-    * output). Superseded snapshots are PRUNED after each successful
-    * land ([[pruneSupersededBatches]]): only latest + previous survive,
-    * so at-rest state is 2·|labels| rows however many waves have run —
-    * and the previous partition is exactly what a replay of the newest
-    * batch reads, so retention never breaks replay. `seedLabels` (id, component) carries the at-rest labels a
-    * previous full run produced over the static corpus — pass an empty
-    * frame for a cold start. The sink receives the post-batch label
-    * table. */
+    * Label state is the `labels` snapshot ([[StateCatalog]]: the full
+    * table per batch — the star set IS the CC state, so landing it is
+    * the checkpoint; at rest 2·|labels| rows however many waves run).
+    * `seedLabels` (id, component) carries the at-rest labels a previous
+    * full run produced over the static corpus — pass an empty frame for
+    * a cold start. The sink receives the post-batch label table. */
   def rollingCcPerBatch(docs: DataFrame,
       staticIndex: graft.operators.MinHashDedup.DedupIndex,
       seedLabels: DataFrame, idCol: String, textCol: String,
       threshold: Double, statePath: String, checkpoint: String)
-      (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(rollingCcBatch(batch, staticIndex, seedLabels, idCol, textCol,
-          threshold, statePath, batchId), batchId)
-      }
-      .start()
+      (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    eachBatch(docs, Some(checkpoint)) { (batch, batchId) =>
+      sink(rollingCcBatch(batch, staticIndex, seedLabels, idCol, textCol,
+        threshold, statePath, batchId), batchId)
+    }
+
+  /** The rolling CC label table AS OF a batch frontier (inclusive): which
+    * docs were clustered together when batch `asOf` was the frontier —
+    * the `labels` snapshot's as-of read ([[StateCatalog]]). */
+  def labelsAsOf(spark: SparkSession, statePath: String,
+      seedLabels: => DataFrame, idType: DataType, asOf: Long): DataFrame =
+    Labels.asOf(spark, statePath, asOf, idType, seedLabels)
 
   /** One micro-batch of [[rollingCcPerBatch]] — package-visible so the
     * spec can force a replay and c14 can drive the same code path in
@@ -1435,55 +1261,6 @@ object StreamOps {
     * post-batch label table, localCheckpointed: the caller reads
     * MATERIALIZED labels — stacking each wave's CC-loop plan on the
     * last would grow the logical plan exponentially in waves. */
-  /** The PRE-advance label table a wave reads: the latest landed
-    * snapshot strictly below `batchId`, or the seed on a cold start.
-    * The latest batch id comes from the PARTITION DIRECTORY listing —
-    * a row-level max(batch_id) would scan every earlier wave's full
-    * label table per batch (O(waves·|labels|) rows for one number);
-    * the listing is pure metadata, and the read partition-prunes to
-    * the one chosen directory. Shared by [[rollingCcBatch]] and
-    * [[rollingRepBatch]] so the composed path reads it ONCE. */
-  private def landedLabelsBefore(spark: SparkSession, statePath: String,
-      seedLabels: => DataFrame,
-      idType: org.apache.spark.sql.types.DataType,
-      batchId: Long): DataFrame = {
-    val labSchema = new org.apache.spark.sql.types.StructType()
-      .add("id", idType).add("component", idType)
-    latestSnapshotOr(spark, s"$statePath/labels", labSchema,
-      seedLabels.select(col("id"), col("component")), batchId)
-  }
-
-  /** The rolling CC label table AS OF a batch frontier (inclusive) —
-    * [[bm25ServeRolling]]'s time-travel contract for the dedup-cluster
-    * state: which docs were clustered together when batch `asOf` was
-    * the frontier. Labels are per-batch SNAPSHOTS (not deltas), so
-    * as-of is a snapshot pick, and [[pruneSupersededBatches]]'s keep=2
-    * bounds the reach — a pruned frontier fails LOUDLY
-    * ([[bm25ServeRolling]]'s contract; the seed fallback would silently
-    * answer from the wrong epoch). The seed still serves the genuine
-    * cold start (no snapshot has landed at all). */
-  def labelsAsOf(spark: SparkSession, statePath: String,
-      seedLabels: => DataFrame,
-      idType: org.apache.spark.sql.types.DataType, asOf: Long): DataFrame =
-    landedLabelsBefore(spark, statePath, seedLabels, idType,
-      snapshotReachBound(spark, s"$statePath/labels", asOf, "label"))
-
-  /** The shared as-of guard for snapshot families (labels, rep): a
-    * frontier with no snapshot at-or-before it while LATER snapshots
-    * exist was pruned — fail loudly rather than silently answer from
-    * the seed's epoch ([[landSnapshot]] makes empty epochs visible, so
-    * this check never misfires on a legitimately-empty frontier).
-    * Returns the exclusive before-bound for [[latestSnapshotOr]]. */
-  private def snapshotReachBound(spark: SparkSession, path: String,
-      asOf: Long, what: String): Long = {
-    val bound = if (asOf == Long.MaxValue) Long.MaxValue else asOf + 1
-    if (latestLandedBatch(spark, path, bound).isEmpty &&
-        latestLandedBatch(spark, path, Long.MaxValue).nonEmpty)
-      sys.error(s"${what}AsOf: no $what snapshot at or before batch $asOf " +
-        "(pruned? retention keeps the last two snapshots)")
-    bound
-  }
-
   private[graft] def rollingCcBatch(batch: DataFrame,
       staticIndex: graft.operators.MinHashDedup.DedupIndex,
       seedLabels: DataFrame, idCol: String, textCol: String,
@@ -1491,8 +1268,8 @@ object StreamOps {
       validateDisjoint: Boolean = true): DataFrame =
     withBatchShuffleWidth(batch.sparkSession, batch.count(), statePath) {
       rollingCcBatchFrom(batch, staticIndex,
-        landedLabelsBefore(batch.sparkSession, statePath, seedLabels,
-          batch.schema(idCol).dataType, batchId),
+        Labels.latest(batch.sparkSession, statePath, batchId,
+          batch.schema(idCol).dataType, seedLabels),
         idCol, textCol, threshold, statePath, batchId, validateDisjoint)
     }
 
@@ -1531,11 +1308,7 @@ object StreamOps {
       graft.operators.ConnectedComponents
         .incrementalStepWith(prev, pairs)(_.localCheckpoint())
     }
-    landSnapshot(labels, s"$statePath/labels", batchId)
-    // label snapshots below latest+previous are superseded — prune
-    // them now that the new land is durable (bounds at-rest state to
-    // 2·|labels| rows however many waves have run)
-    pruneSupersededBatches(labels.sparkSession, s"$statePath/labels")
+    Labels.land(labels, statePath, batchId)
     labels
   }
 
@@ -1568,17 +1341,13 @@ object StreamOps {
       seedLabels: DataFrame, seedState: DataFrame, scores: DataFrame,
       idCol: String, textCol: String, threshold: Double,
       statePath: String, checkpoint: String)
-      (sink: (DataFrame, DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (labels, state) = rollingRepBatch(batch, staticIndex,
-          seedLabels, seedState, scores, idCol, textCol, threshold,
-          statePath, batchId)
-        sink(labels, state, batchId)
-      }
-      .start()
+      (sink: (DataFrame, DataFrame, Long) => Unit): StreamingQuery =
+    eachBatch(docs, Some(checkpoint)) { (batch, batchId) =>
+      val (labels, state) = rollingRepBatch(batch, staticIndex,
+        seedLabels, seedState, scores, idCol, textCol, threshold,
+        statePath, batchId)
+      sink(labels, state, batchId)
+    }
 
   /** One micro-batch of ROLLING representative maintenance — c16's
     * quality-based representative selection kept current ACROSS
@@ -1591,8 +1360,7 @@ object StreamOps {
     * this wave contribute their singleton state from the at-rest
     * `scores` table. Per-wave cost: |state| + |new members| rows joined
     * against the |labels| table — never a member rescan, never pair
-    * history. State lands snapshot-style at `statePath/rep` (pruned to
-    * latest+previous, replay-idempotent like the labels). Returns
+    * history. State is the `rep` snapshot ([[StateCatalog]]). Returns
     * (labels, state), both localCheckpointed. */
   private[graft] def rollingRepBatch(batch: DataFrame,
       staticIndex: graft.operators.MinHashDedup.DedupIndex,
@@ -1605,48 +1373,24 @@ object StreamOps {
     val idType = batch.schema(idCol).dataType
     // the PRE-advance label table — read ONCE and passed through to the
     // CC advance (it is the same table rollingCcBatch would re-read)
-    val prevLabels = landedLabelsBefore(spark, statePath, seedLabels,
-      idType, batchId)
-    val prevState = repStateBefore(spark, statePath, seedState, idType, batchId)
+    val prevLabels = Labels.latest(spark, statePath, batchId, idType, seedLabels)
+    val prevState = Rep.latest(spark, statePath, batchId, idType, seedState)
     val labels = rollingCcBatchFrom(batch, staticIndex, prevLabels, idCol,
       textCol, threshold, statePath, batchId, validateDisjoint)
     (labels, repAdvance(labels, prevLabels, prevState, scores, idType,
       statePath, batchId))
   }
 
-  /** The PRE-advance representative state a wave reads: the latest
-    * landed snapshot strictly below `batchId`, or the seed on a cold
-    * start — the label-table read's twin. */
-  /** [[labelsAsOf]] for the representative monoid state — same snapshot
-    * pick, same loud failure past the keep=2 retention, same seed
-    * fallback for the genuine cold start. */
+  /** [[labelsAsOf]] for the representative monoid state (`rep`). */
   def repAsOf(spark: SparkSession, statePath: String,
-      seedState: => DataFrame,
-      idType: org.apache.spark.sql.types.DataType, asOf: Long): DataFrame =
-    repStateBefore(spark, statePath, seedState, idType,
-      snapshotReachBound(spark, s"$statePath/rep", asOf, "rep"))
-
-  private def repStateBefore(spark: SparkSession, statePath: String,
-      seedState: => DataFrame,
-      idType: org.apache.spark.sql.types.DataType,
-      batchId: Long): DataFrame = {
-    val stSchema = new org.apache.spark.sql.types.StructType()
-      .add("component", idType)
-      .add("n_docs", org.apache.spark.sql.types.LongType)
-      .add("q_sum", org.apache.spark.sql.types.LongType)
-      .add("best_q_e6", org.apache.spark.sql.types.LongType)
-      .add("best_doc", idType)
-    latestSnapshotOr(spark, s"$statePath/rep", stSchema,
-      seedState.select(col("component"), col("n_docs"), col("q_sum"),
-        col("best_q_e6"), col("best_doc")), batchId)
-  }
+      seedState: => DataFrame, idType: DataType, asOf: Long): DataFrame =
+    Rep.asOf(spark, statePath, asOf, idType, seedState)
 
   /** The representative-state ADVANCE half of [[rollingRepBatch]] given
     * the post-advance labels — the |state|-row monoid merge. Factored
     * out so the composed gate reuses the one shared CC advance. */
   private def repAdvance(labels: DataFrame, prevLabels: DataFrame,
-      prevState: DataFrame, scores: DataFrame,
-      idType: org.apache.spark.sql.types.DataType,
+      prevState: DataFrame, scores: DataFrame, idType: DataType,
       statePath: String, batchId: Long): DataFrame = {
     val spark = labels.sparkSession
     // re-key: an old component id c is itself a member of the new label
@@ -1697,8 +1441,7 @@ object StreamOps {
           (-col("b.nq")).as("best_q_e6"), col("b.bd").as("best_doc"))
         .localCheckpoint() // eager — same plan-stacking trap as the labels
     }
-    landSnapshot(state, s"$statePath/rep", batchId)
-    pruneSupersededBatches(spark, s"$statePath/rep")
+    Rep.land(state, statePath, batchId)
     state
   }
 
@@ -1735,12 +1478,10 @@ object StreamOps {
 
   /** One micro-batch of ROLLING integer-grid PageRank — g1's graph
     * ranking kept current across ingest waves: the wave's symmetric
-    * edge delta appends to the landed edge list (`pr_edges`, batch_id-
-    * partitioned, replay-idempotent), and the scores advance by
+    * edge delta appends to the `pr_edges` log, and the scores advance by
     * [[pagerankAdvance]] — warm-started from the PREVIOUS frontier's
-    * landed score snapshot over the ACCUMULATED edges — then land
-    * snapshot-style at `pr`, pruned to latest+previous ([[prAsOf]]
-    * time-travels them). Warm-starting is the incremental point: a
+    * landed score snapshot over the ACCUMULATED edges — then land as the
+    * `pr` snapshot ([[prAsOf]] time-travels them). Warm-starting is the incremental point: a
     * from-scratch ranking pays its full iteration budget per refresh;
     * the rolling one spends `iters` per wave and carries convergence
     * forward in the landed scores — the answer is a pure function of
@@ -1752,31 +1493,22 @@ object StreamOps {
     val spark = symDelta.sparkSession
     // eager checkpoint: the caller's delta derivation (a union+distinct
     // shuffle in pagerankBatch) runs ONCE — the width gate's count and
-    // landDelta's write both read the materialized rows
+    // the edge land both read the materialized rows
     val delta = symDelta.localCheckpoint()
     withBatchShuffleWidth(spark, delta.count(), statePath) {
       val idType = delta.schema("src").dataType
-      landDelta(delta, s"$statePath/pr_edges", batchId)
-      val edgeSchema = new org.apache.spark.sql.types.StructType()
-        .add("src", idType).add("dst", idType)
+      PrEdges.land(delta, statePath, batchId)
       // the frontier's full edge list: <= batchId so a checkpoint replay
       // never sees a LATER wave's edges; the eager checkpoint keeps the
       // per-iteration plans flat (the CC plan-growth rule)
-      val sym = readDelta(spark, s"$statePath/pr_edges", edgeSchema)
-        .filter(col("batch_id") <= batchId).drop("batch_id")
-        .localCheckpoint()
-      val prSchema = new org.apache.spark.sql.types.StructType()
-        .add("id", idType)
-        .add("pr", org.apache.spark.sql.types.LongType)
+      val sym = PrEdges.through(spark, statePath, batchId, idType)
+        .drop("batch_id").localCheckpoint()
       // cold start seeds EMPTY (not a caller frame): every vertex of the
       // first frontier enters at the uniform init inside the advance
-      val prev = latestSnapshotOr(spark, s"$statePath/pr", prSchema,
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], prSchema),
-        batchId)
+      val prev = Pr.latest(spark, statePath, batchId, idType,
+        Pr.empty(spark, idType))
       val pr = pagerankAdvance(prev, sym, iters, dampPpm).localCheckpoint()
-      landSnapshot(pr, s"$statePath/pr", batchId)
-      pruneSupersededBatches(spark, s"$statePath/pr")
+      Pr.land(pr, statePath, batchId)
       pr
     }
   }
@@ -1807,33 +1539,10 @@ object StreamOps {
     } finally pairs.unpersist()
   }
 
-  /** [[labelsAsOf]] for the rolling PageRank scores — same snapshot
-    * pick, same loud failure past the keep=2 retention, same seed
-    * fallback for the genuine cold start. */
+  /** [[labelsAsOf]] for the rolling PageRank scores (`pr`). */
   def prAsOf(spark: SparkSession, statePath: String,
-      seedScores: => DataFrame,
-      idType: org.apache.spark.sql.types.DataType, asOf: Long): DataFrame = {
-    val prSchema = new org.apache.spark.sql.types.StructType()
-      .add("id", idType)
-      .add("pr", org.apache.spark.sql.types.LongType)
-    latestSnapshotOr(spark, s"$statePath/pr", prSchema,
-      seedScores.select(col("id"), col("pr")),
-      snapshotReachBound(spark, s"$statePath/pr", asOf, "pagerank"))
-  }
-
-  /** The band-row schema the rolling image AND audio families share:
-    * the banded fingerprint — (doc_id, b0..b{n-1}) plus the exploded
-    * (t, bv) probe key, with the band count taken from the ONE
-    * authority ([[graft.multimodal.MediaOps.MmNdBands]]) so a banding
-    * change cannot silently desynchronize the landed-delta read schema
-    * from what the fingerprint writer produces. */
-  private val ndBandSchema = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
-    (0 until graft.multimodal.MediaOps.MmNdBands)
-      .foldLeft(new StructType().add("doc_id", LongType)) {
-        (st, t) => st.add(s"b$t", LongType)
-      }.add("t", IntegerType).add("bv", LongType)
-  }
+      seedScores: => DataFrame, idType: DataType, asOf: Long): DataFrame =
+    Pr.asOf(spark, statePath, asOf, idType, seedScores)
 
   /** ROLLING image near-dup — dedup's media crossing in CONTINUOUS form
     * (mm10/mm14's banded dHash sweep as a stream): per micro-batch, ONLY
@@ -1856,26 +1565,26 @@ object StreamOps {
   private[graft] def imageNdBatch(batch: DataFrame, statePath: String,
       batchId: Long): DataFrame =
     mediaNdBatch(batch, statePath, batchId,
-      graft.multimodal.MediaOps.imageBandRows, "img_fp", "img_nd")
+      graft.multimodal.MediaOps.imageBandRows, ImgFp, ImgNd)
 
   /** [[imageNdBatch]] for the AUDIO modality: mm11's banded
     * energy-contour fingerprints, same exactly-once sweep identity. */
   private[graft] def audioNdBatch(batch: DataFrame, statePath: String,
       batchId: Long): DataFrame =
     mediaNdBatch(batch, statePath, batchId,
-      graft.multimodal.MediaOps.audioBandRows, "aud_fp", "aud_nd")
+      graft.multimodal.MediaOps.audioBandRows, AudFp, AudNd)
 
   /** [[imageNdBatch]] for the VIDEO modality: mm18's banded
     * frame-luma-contour fingerprints, same exactly-once sweep identity. */
   private[graft] def videoNdBatch(batch: DataFrame, statePath: String,
       batchId: Long): DataFrame =
     mediaNdBatch(batch, statePath, batchId,
-      graft.multimodal.MediaOps.videoBandRows, "vid_fp", "vid_nd")
+      graft.multimodal.MediaOps.videoBandRows, VidFp, VidNd)
 
   private def mediaNdBatch(batch: DataFrame, statePath: String,
       batchId: Long,
       bandRows: org.apache.spark.sql.Dataset[(Long, String)] => DataFrame,
-      fpName: String, ndName: String): DataFrame = {
+      fp: Table, nd: Table): DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
     val bands = bandRows(
@@ -1888,8 +1597,7 @@ object StreamOps {
       try {
         // replay guard: a re-run batch must not see its own landed bands
         // (its docs would cross-match themselves)
-        val landed = readDelta(spark, s"$statePath/$fpName", ndBandSchema)
-          .filter(col("batch_id") < batchId).drop("batch_id")
+        val landed = fp.before(spark, statePath, batchId)
         // a CROSS-batch re-arrival would also self-match (doc_a ==
         // doc_b) and re-discover its old pairs, silently breaking the
         // exactly-once pair-log identity — fail loudly instead (the
@@ -1900,7 +1608,7 @@ object StreamOps {
           .limit(1).count()
         require(clash == 0L,
           s"mediaNdBatch: batch $batchId contains doc ids already landed " +
-            s"under $statePath/$fpName — re-ingest would corrupt the " +
+            s"under ${fp.dir(statePath)} — re-ingest would corrupt the " +
             "exactly-once pair log; dedup ids upstream")
         // eager checkpoint: the pair land below and the caller's read
         // both consume the sweep exactly once
@@ -1910,8 +1618,8 @@ object StreamOps {
         // shuffled band equi-join above its row bound)
         val pairs = graft.multimodal.MediaOps.ndSweepBatch(landed, bands, n)
           .localCheckpoint()
-        landDelta(pairs, s"$statePath/$ndName", batchId)
-        landDelta(bands, s"$statePath/$fpName", batchId)
+        nd.land(pairs, statePath, batchId)
+        fp.land(bands, statePath, batchId)
         pairs
       } finally bands.unpersist()
     }
@@ -1920,28 +1628,22 @@ object StreamOps {
   /** The STREAMING form of the rolling image near-dup family: a
     * checkpointed foreachBatch over a (doc_id, text) stream — replay of
     * an uncommitted batch rewrites its own batch_id partitions
-    * ([[landDelta]]'s dynamic overwrite) and re-derives the same pairs
+    * (the land's dynamic overwrite) and re-derives the same pairs
     * (the landed state it sweeps against excludes its own wave), so the
     * pair log is exactly-once under restart. [[audioNdPerBatch]] is the
     * audio twin. */
   def imageNdPerBatch(docs: DataFrame, statePath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        imageNdBatch(batch, statePath, batchId); ()
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    eachBatch(docs, Some(checkpoint)) { (batch, batchId) =>
+      imageNdBatch(batch, statePath, batchId); ()
+    }
 
   /** [[imageNdPerBatch]] for the audio modality. */
   def audioNdPerBatch(docs: DataFrame, statePath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        audioNdBatch(batch, statePath, batchId); ()
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    eachBatch(docs, Some(checkpoint)) { (batch, batchId) =>
+      audioNdBatch(batch, statePath, batchId); ()
+    }
 
   /** The image near-dup pair log AS OF a wave: every pair discovered by
     * batches ≤ `asOf` — an append-only delta read (partition-pruned on
@@ -1949,25 +1651,15 @@ object StreamOps {
     * immutable fact stamped at its discovery wave (nothing supersedes
     * it; retention is compaction, which preserves every row). */
   def imageNdAsOf(spark: SparkSession, statePath: String, asOf: Long): DataFrame =
-    mediaNdAsOf(spark, statePath, "img_nd", asOf)
+    ImgNd.through(spark, statePath, asOf).drop("batch_id")
 
   /** [[imageNdAsOf]] for the audio pair log. */
   def audioNdAsOf(spark: SparkSession, statePath: String, asOf: Long): DataFrame =
-    mediaNdAsOf(spark, statePath, "aud_nd", asOf)
+    AudNd.through(spark, statePath, asOf).drop("batch_id")
 
   /** [[imageNdAsOf]] for the video pair log. */
   def videoNdAsOf(spark: SparkSession, statePath: String, asOf: Long): DataFrame =
-    mediaNdAsOf(spark, statePath, "vid_nd", asOf)
-
-  private def mediaNdAsOf(spark: SparkSession, statePath: String,
-      ndName: String, asOf: Long): DataFrame = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
-    val pairSchema = new StructType()
-      .add("doc_a", LongType).add("doc_b", LongType)
-      .add("hamming", IntegerType)
-    readDelta(spark, s"$statePath/$ndName", pairSchema)
-      .filter(col("batch_id").cast("long") <= asOf).drop("batch_id")
-  }
+    VidNd.through(spark, statePath, asOf).drop("batch_id")
 
   /** The d48 span length the rolling family fixes — one authority with
     * the batch operator ([[graft.queries.TextOps.D48MinLen]]), so the
@@ -2021,12 +1713,8 @@ object StreamOps {
     val n = grams.count() // materialize ONCE: key probe + counts + events
     withBatchShuffleWidth(spark, n, statePath) {
       try {
-        import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
-        val gramSchema = new StructType()
-          .add("id", LongType).add("pos", IntegerType).add("gh", LongType)
         // replay guard: a re-run batch must not see its own landed grams
-        val landed = readDelta(spark, s"$statePath/span_grams", gramSchema)
-          .filter(col("batch_id") < batchId).drop("batch_id")
+        val landed = SpanGrams.before(spark, statePath, batchId)
         // a cross-batch re-arrival would double-count its doc in the
         // distinct-doc threshold and re-emit its events — fail loudly
         // (the mediaNdBatch convention). Guard cost: one scan of the
@@ -2038,7 +1726,7 @@ object StreamOps {
           .limit(1).count()
         require(clash == 0L,
           s"spanDedupBatch: batch $batchId contains doc ids already landed " +
-            s"under $statePath/span_grams — re-ingest would corrupt the " +
+            s"under ${SpanGrams.dir(statePath)} — re-ingest would corrupt the " +
             "exactly-once event log; dedup ids upstream")
         // landed occurrences of THIS batch's gram keys only — the probe
         // broadcasts while key-bounded ([[SpanProbeBroadcastMaxKeys]] —
@@ -2070,17 +1758,17 @@ object StreamOps {
           .unionByName(hit.join(newly, Seq("gh"), "left_semi")
             .select(col("id"), col("pos")))
           .localCheckpoint() // the land below and the caller's read
-        landDelta(events, s"$statePath/span_events", batchId)
-        landDelta(grams, s"$statePath/span_grams", batchId)
+        SpanEvents.land(events, statePath, batchId)
+        SpanGrams.land(grams, statePath, batchId)
         // the arrived-document universe (1 row per doc PER BATCH): what
         // lets spansAsOf serve the one-shot d48 schema — zero-coverage
         // and shorter-than-L documents included — without a corpus join.
         // Gram-producing re-arrivals fail the clash guard above; a
         // gram-FREE doc re-arriving across batches lands two rows here,
         // which spansAsOf collapses (min-batch wins) at serve time
-        landDelta(batch.select(col("doc_id").as("id"),
+        SpanDoclens.land(batch.select(col("doc_id").as("id"),
             size(split(col("text"), " ")).cast("long").as("n_tokens")),
-          s"$statePath/span_doclens", batchId)
+          statePath, batchId)
         events
       } finally grams.unpersist()
     }
@@ -2091,13 +1779,10 @@ object StreamOps {
     * the same events (its landed grams are excluded from its own
     * sweep), so the event log is exactly-once under restart. */
   def spanDedupPerBatch(docs: DataFrame, statePath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        spanDedupBatch(batch, statePath, batchId); ()
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    eachBatch(docs, Some(checkpoint)) { (batch, batchId) =>
+      spanDedupBatch(batch, statePath, batchId); ()
+    }
 
   /** Per-document copied-span coverage AS OF a wave, in the ONE-SHOT
     * d48 SCHEMA: (doc_id, n_tokens, n_spans, covered_tokens,
@@ -2113,13 +1798,7 @@ object StreamOps {
     * are partition-pruned delta reads, never a snapshot pick. */
   def spansAsOf(spark: SparkSession, statePath: String,
       asOf: Long = Long.MaxValue): DataFrame = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
-    val evSchema = new StructType()
-      .add("id", LongType).add("pos", IntegerType)
-    val dlSchema = new StructType()
-      .add("id", LongType).add("n_tokens", LongType)
-    val events = readDelta(spark, s"$statePath/span_events", evSchema)
-      .filter(col("batch_id").cast("long") <= asOf)
+    val events = SpanEvents.through(spark, statePath, asOf)
       .select(col("id"), col("pos"))
     val perDoc = graft.operators.SpanDedup.mergedSpanLens(events, SpanMinLen)
       .groupBy(col("id"))
@@ -2131,10 +1810,9 @@ object StreamOps {
     // grams, so a shorter-than-L doc re-arriving across batches would
     // slip it and duplicate here — keep the first arrival's row (min
     // batch), matching the event log's exactly-once discovery stamps
-    readDelta(spark, s"$statePath/span_doclens", dlSchema)
-      .filter(col("batch_id").cast("long") <= asOf)
+    SpanDoclens.through(spark, statePath, asOf)
       .groupBy(col("id").as("doc_id"))
-      .agg(min_by(col("n_tokens"), col("batch_id").cast("long"))
+      .agg(min_by(col("n_tokens"), col("batch_id"))
         .as("n_tokens"))
       .join(perDoc, col("doc_id") === perDoc("id"), "left")
       .select(col("doc_id"), col("n_tokens"),
@@ -2174,14 +1852,10 @@ object StreamOps {
     * builds the EXACT k1/k6 scoring expression — scores are
     * bit-identical to a from-scratch corpus scan (spec + oracle). */
   def bm25IndexPerBatch(docs: DataFrame, idCol: String, textCol: String,
-      shards: Int, statePath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        bm25IndexBatch(batch, idCol, textCol, shards, statePath, batchId)
-      }
-      .start()
+      shards: Int, statePath: String, checkpoint: String): StreamingQuery =
+    eachBatch(docs, Some(checkpoint)) { (batch, batchId) =>
+      bm25IndexBatch(batch, idCol, textCol, shards, statePath, batchId)
+    }
 
   /** One micro-batch of [[bm25IndexPerBatch]] — package-visible so the
     * spec can force a replay and k11 can drive batch waves. The batch
@@ -2216,21 +1890,11 @@ object StreamOps {
       .withColumn("shard",
         pmod(graft.operators.PortableHash.hex60(col("term")),
           lit(shards.toLong)).cast("int"))
-    posted.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id", "shard")
-      .parquet(s"$statePath/bm25_postings")
-    val superseded = supersedeOnLand(spark, idType, lens,
-      s"$statePath/bm25_doclens", s"$statePath/bm25_tombstones", batchId,
-      payload = Seq("dli" -> org.apache.spark.sql.types.LongType))
-    val statsSchema = new org.apache.spark.sql.types.StructType()
-      .add("n", org.apache.spark.sql.types.LongType)
-      .add("sumdl", org.apache.spark.sql.types.LongType)
-    val prev = latestSnapshotOr(spark, s"$statePath/bm25_stats", statsSchema,
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], statsSchema),
-      batchId)
+    Bm25Postings.land(posted, statePath, batchId)
+    val superseded = supersedeOnLand(spark, idType, lens, Bm25Doclens,
+      Bm25Tombstones, statePath, batchId)
+    val prev = Bm25Stats.latest(spark, statePath, batchId, LongType,
+      Bm25Stats.empty(spark))
     val batchStats = batch.agg(count(lit(1)).as("n"),
       sum(size(split(col(textCol), " ")).cast("long")).as("sumdl"))
     // the superseded versions leave the corpus scalars as they enter
@@ -2241,8 +1905,7 @@ object StreamOps {
     val merged = prev.unionByName(batchStats).unionByName(deadStats)
       .agg(coalesce(sum(col("n")), lit(0L)).as("n"),
         coalesce(sum(col("sumdl")), lit(0L)).as("sumdl"))
-    landDelta(merged, s"$statePath/bm25_stats", batchId)
-    pruneSupersededBatches(spark, s"$statePath/bm25_stats")
+    Bm25Stats.land(merged, statePath, batchId)
   }
 
   /** BM25 scores for `terms` served from the ROLLING index — the k6
@@ -2257,12 +1920,11 @@ object StreamOps {
     * Serve-while-quiet: like the compaction passes, serving assumes the
     * writer is not CONCURRENTLY landing-and-pruning under the reader —
     * the stats snapshot is chosen by directory listing and scanned
-    * lazily, so if two more micro-batches land and
-    * [[pruneSupersededBatches]] runs before this frame executes, the
-    * chosen `batch_id=` partition may be gone (FileNotFoundException).
-    * The default keep=2 protects a one-batch lag; a deployment serving
-    * from continuously-written state should raise the writer's keep (or
-    * quiesce the stream for the read window), not retry blind.
+    * lazily, so if two more micro-batches land and prune before this
+    * frame executes, the chosen `batch_id=` partition may be gone
+    * (FileNotFoundException). Keeping two snapshots protects a one-batch
+    * lag; a deployment serving from continuously-written state should
+    * quiesce the stream for the read window, not retry blind.
     *
     * Time travel: `asOf` serves the index AS OF the completion of that
     * batch id (inclusive) — segments from later batches are partition-
@@ -2270,11 +1932,10 @@ object StreamOps {
     * version was still live then), and the corpus scalars come from
     * that batch's stats snapshot. The answer is reproducible retrieval
     * lineage: the exact scores a query returned when batch `asOf` was
-    * the frontier. Retention bounds the reach — [[pruneSupersededBatches]]
-    * keeps the last two stats snapshots, and [[mergeBm25Segments]]
+    * the frontier. Retention bounds the reach — the `bm25_stats`
+    * snapshot keeps the last two, and [[mergeBm25Segments]]
     * (like any VACUUM) collapses superseded history into the merged
-    * view; a deployment that needs deep time travel raises the keep and
-    * defers merges. */
+    * view. */
   def bm25ServeRolling(spark: SparkSession, statePath: String,
       terms: Seq[String], shards: Int,
       asOf: Long = Long.MaxValue): DataFrame =
@@ -2300,19 +1961,18 @@ object StreamOps {
     require(terms.nonEmpty, "bm25 needs at least one query term")
     val shardIds = terms
       .map(t => (graft.operators.PortableHash.hex60(t) % shards).toInt).distinct
-    // hasParquetData, not pathExists: a postings DIRECTORY with no data
+    // hasData, not exists: a postings DIRECTORY with no data
     // files (only empty batches landed) must hit this clear error, not
     // schema inference's opaque one
-    if (!hasParquetData(spark, s"$statePath/bm25_postings"))
+    if (!Bm25Postings.hasData(spark, statePath))
       sys.error(s"bm25ServeRolling: no postings landed at $statePath — " +
         "run bm25IndexPerBatch (or bm25IndexBatch) first")
-    val probed = spark.read.parquet(s"$statePath/bm25_postings")
+    val probed = Bm25Postings.inferred(spark, statePath)
       .filter(col("shard").isin(shardIds: _*) && col("term").isin(terms: _*) &&
         col("batch_id").cast("long") <= asOf)
     // supersede-on-land: a (id, batch_id) named by a tombstone is a dead
     // version's posting — drop it before df/tf ([[dropDeadVersions]])
-    val post = dropDeadVersions(spark, probed,
-      s"$statePath/bm25_tombstones", asOf)
+    val post = dropDeadVersions(spark, probed, Bm25Tombstones, statePath, asOf)
     val tfAggs = terms.zipWithIndex.map { case (t, i) =>
       sum(when(col("term") === t, col("tf")).otherwise(lit(0L))).as(s"tf_$i") }
     val byDoc = post.groupBy(col("id"), col("dli"))
@@ -2320,16 +1980,8 @@ object StreamOps {
     val dfAggs = terms.zipWithIndex.map { case (t, i) =>
       sum(when(col("term") === t, lit(1L)).otherwise(lit(0L))).as(s"df_$i") }
     val dfs = post.agg(dfAggs.head, dfAggs.tail: _*)
-    val statsSchema = new org.apache.spark.sql.types.StructType()
-      .add("n", org.apache.spark.sql.types.LongType)
-      .add("sumdl", org.apache.spark.sql.types.LongType)
-    val statsBound = if (asOf == Long.MaxValue) Long.MaxValue else asOf + 1
-    val last = latestLandedBatch(spark, s"$statePath/bm25_stats", statsBound)
-      .getOrElse(sys.error(s"bm25ServeRolling: no stats snapshot landed" +
-        (if (asOf != Long.MaxValue) s" at or before batch $asOf (pruned? " +
-          "retention keeps the last two snapshots)" else "")))
-    val stats = readDelta(spark, s"$statePath/bm25_stats", statsSchema)
-      .filter(col("batch_id") === last).drop("batch_id")
+    val stats = Bm25Stats.asOf(spark, statePath, asOf, LongType,
+      sys.error("bm25ServeRolling: no stats snapshot landed"))
     byDoc.crossJoin(broadcast(stats)).crossJoin(broadcast(dfs))
       .select(col("id"),
         graft.operators.KeywordSearch.scoreColumn(terms).as("score"))
@@ -2348,23 +2000,18 @@ object StreamOps {
     * job is to stop the release, not note it. The report the sink saw
     * before the failure names the violating level's minimum class size
     * and rows at risk. Batches need (source, lang, n_chars). State:
-    * the class-count table landed snapshot-style at `statePath/kanon`
-    * (pruned to latest+previous, replay-idempotent); after any number
+    * the `kanon` class-count snapshot ([[StateCatalog]]); after any number
     * of waves the window report equals d43's one-shot over everything
     * arrived (spec-pinned). */
   def kAnonPerBatch(docs: DataFrame, frozenLevel: Int, statePath: String,
-      checkpoint: String)(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpoint: String)(sink: (DataFrame, Long) => Unit): StreamingQuery = {
     require(frozenLevel >= 0 && frozenLevel <= 2,
       s"frozenLevel must be one of d43's generalization levels 0..2, got $frozenLevel")
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val report = kAnonBatch(batch, statePath, batchId)
-        sink(report, batchId)
-        enforceKAnon(report, frozenLevel)
-      }
-      .start()
+    eachBatch(docs, Some(checkpoint)) { (batch, batchId) =>
+      val report = kAnonBatch(batch, statePath, batchId)
+      sink(report, batchId)
+      enforceKAnon(report, frozenLevel)
+    }
   }
 
   /** The release gate both k-anonymity monitors share: throw when the
@@ -2390,49 +2037,32 @@ object StreamOps {
       kAnonBatchImpl(batch, statePath, batchId)
     }
 
-  /** Schema of the accumulated k-anonymity class-count snapshots —
-    * shared by the per-batch merge and [[kanonAsOf]]. */
-  private val KanonSchema = new org.apache.spark.sql.types.StructType()
-    .add("level", org.apache.spark.sql.types.IntegerType)
-    .add("source", org.apache.spark.sql.types.StringType)
-    .add("lang", org.apache.spark.sql.types.StringType)
-    .add("len_class", org.apache.spark.sql.types.LongType)
-    .add("sz", org.apache.spark.sql.types.LongType)
-
-  private def emptyKanon(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], KanonSchema)
-
   /** [[kAnonBatch]] without the width wrapper — the composed gate calls
     * it inside its own already-narrowed region. */
   private def kAnonBatchImpl(batch: DataFrame, statePath: String,
       batchId: Long): DataFrame = {
     val spark = batch.sparkSession
-    val prev = latestSnapshotOr(spark, s"$statePath/kanon", KanonSchema,
-      emptyKanon(spark), batchId)
+    val prev = Kanon.latest(spark, statePath, batchId, LongType,
+      Kanon.empty(spark))
     val merged = prev
       .unionByName(graft.queries.TextOps.kAnonClassCounts(batch))
       .groupBy(col("level"), col("source"), col("lang"), col("len_class"))
       .agg(sum(col("sz")).as("sz"))
       .localCheckpoint() // eager — the snapshot-per-wave plan trap
-    landSnapshot(merged, s"$statePath/kanon", batchId)
-    pruneSupersededBatches(spark, s"$statePath/kanon")
+    Kanon.land(merged, statePath, batchId)
     graft.queries.TextOps.kAnonReport(merged)
   }
 
-  /** [[labelsAsOf]] for the k-anonymity class-count state — the
-    * accumulated (level, source, lang, len_class, sz) table as it stood
-    * when batch `asOf` was the frontier. Same snapshot pick, same loud
-    * failure past the keep=2 retention; the cold start is an empty
-    * count table (the monitor accumulates from nothing). The caller
+  /** [[labelsAsOf]] for the k-anonymity class-count state (`kanon`) —
+    * the accumulated (level, source, lang, len_class, sz) table as it
+    * stood when batch `asOf` was the frontier; the cold start is an
+    * empty count table (the monitor accumulates from nothing). The caller
     * shapes it with [[graft.queries.TextOps.kAnonReport]] — lineage for
     * a release decision: the exact class profile the gate saw when it
     * passed or failed batch `asOf`. */
   def kanonAsOf(spark: SparkSession, statePath: String,
       asOf: Long): DataFrame =
-    latestSnapshotOr(spark, s"$statePath/kanon", KanonSchema,
-      emptyKanon(spark),
-      snapshotReachBound(spark, s"$statePath/kanon", asOf, "kanon"))
+    Kanon.asOf(spark, statePath, asOf, LongType, Kanon.empty(spark))
 
   /** Streaming twin of c6's split-leakage audit, in its DEPLOYMENT
     * orientation: c6 audits a finished corpus's own split internally;
@@ -2448,14 +2078,10 @@ object StreamOps {
     * .gramHashes]] over the released train split. */
   def splitLeakagePerBatch(docs: DataFrame, trainGrams: DataFrame,
       idCol: String, textCol: String, n: Int, checkpoint: String)
-      (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(splitLeakageBatch(batch, trainGrams, idCol, textCol, n), batchId)
-      }
-      .start()
+      (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    eachBatch(docs, Some(checkpoint)) { (batch, batchId) =>
+      sink(splitLeakageBatch(batch, trainGrams, idCol, textCol, n), batchId)
+    }
 
   /** One batch of [[splitLeakagePerBatch]]: (split, n_docs, n_leaky)
     * over the batch's val/test docs. */
@@ -2497,14 +2123,10 @@ object StreamOps {
     * the-batch contract the dedup gate proves for shingles. */
   def ivfAssignPerBatch(vectors: DataFrame,
       centroids: Seq[(Int, Seq[Double])], idCol: String, embCol: String,
-      statePath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ivfAssignBatch(batch, centroids, idCol, embCol, statePath, batchId)
-      }
-      .start()
+      statePath: String, checkpoint: String): StreamingQuery =
+    eachBatch(vectors, Some(checkpoint)) { (batch, batchId) =>
+      ivfAssignBatch(batch, centroids, idCol, embCol, statePath, batchId)
+    }
 
   /** One micro-batch of [[ivfAssignPerBatch]] — package-visible so the
     * spec can force a replay of a committed batchId and assert the
@@ -2514,8 +2136,8 @@ object StreamOps {
       statePath: String, batchId: Long): Unit = {
     val e = batch.select(col(idCol).as("id"),
       col(embCol).cast("array<double>").as("emb"))
-    landDelta(graft.operators.IvfSearch.assign(e, centroids),
-      s"$statePath/ivf_assign", batchId)
+    IvfAssign.land(graft.operators.IvfSearch.assign(e, centroids),
+      statePath, batchId)
   }
 
   /** The grown IVF index after any number of [[ivfAssignPerBatch]]
@@ -2548,11 +2170,10 @@ object StreamOps {
   def grownIvfIndex(spark: SparkSession,
       base: graft.operators.IvfSearch.Index, statePath: String,
       asOf: Long = Long.MaxValue): graft.operators.IvfSearch.Index = {
-    import org.apache.spark.sql.types.{LongType, StructType}
     val idType = base.assignments.schema("id").dataType
-    val hasGrow = hasParquetData(spark, s"$statePath/ivf_assign")
-    val hasTombs = Seq("ivf_tombstones", "ivf_base_tombstones")
-      .exists(n => hasParquetData(spark, s"$statePath/$n"))
+    val tombLogs = Seq(IvfTombstones, IvfBaseTombstones)
+    val hasGrow = IvfAssign.hasData(spark, statePath)
+    val hasTombs = tombLogs.exists(_.hasData(spark, statePath))
     // nothing landed, nothing deleted: the base serves as-is — the i8
     // cold-start probes pay no union/anti-join for empty state. The
     // assignments get a fresh PLAN NODE (a trivial Project over the
@@ -2572,9 +2193,7 @@ object StreamOps {
     // (localCheckpoint — the resolve-time isolation documented above)
     // is skipped only when the log was empty at the probe: pinning an
     // empty frame buys nothing
-    val deltasRaw = readDelta(spark, s"$statePath/ivf_assign",
-        StructType(base.assignments.schema.fields))
-      .filter(col("batch_id").cast("long") <= asOf)
+    val deltasRaw = IvfAssign.through(spark, statePath, asOf, idType)
     val deltas = if (hasGrow) deltasRaw.localCheckpoint() else deltasRaw
     // versions carry their landing wave so a tombstone suppresses only
     // versions landed AT OR BEFORE its delete wave — a later re-ingest
@@ -2582,19 +2201,15 @@ object StreamOps {
     val grown = base.assignments
       .withColumn("src_batch", lit(-1L))
       .unionByName(deltas.withColumnRenamed("batch_id", "src_batch")
-        .select(col("id"), col("emb"), col("centroid_id"),
-          col("src_batch").cast("long")))
+        .select(col("id"), col("emb"), col("centroid_id"), col("src_batch")))
     if (!hasTombs)
       return graft.operators.IvfSearch.Index(base.centroids,
         grown.select(col("id"), col("emb"), col("centroid_id")))
-    val tombSchema = new StructType()
-      .add("id", idType).add("dead_batch", LongType)
     // request-sized: the tombstone pin costs the forget-list, and makes
     // a resolved index equally immune to a concurrent reclaim's log clear
-    val dead = Seq("ivf_tombstones", "ivf_base_tombstones")
-      .map(n => readDelta(spark, s"$statePath/$n", tombSchema)
-        .filter(col("batch_id").cast("long") <= asOf)
-        .select(col("id").as("t_id"), col("batch_id").cast("long").as("del_batch")))
+    val dead = tombLogs
+      .map(_.through(spark, statePath, asOf, idType)
+        .select(col("id").as("t_id"), col("batch_id").as("del_batch")))
       .reduce(_.unionByName(_))
       .localCheckpoint()
     val live = grown.join(broadcast(dead),
@@ -2621,24 +2236,17 @@ object StreamOps {
     // delete batches are request-sized: pin the id set once — the
     // landed-version lookup and the base-only anti-join both read it
     val del = ids.select(col("id")).distinct().localCheckpoint()
-    val assignPath = s"$statePath/ivf_assign"
-    // explicit-schema delta read (the grownIvfIndex rule): a directory
-    // that exists but holds no data files — all grow waves landed empty —
-    // must read as zero landed versions, never throw schema inference
-    val assignSchema = new org.apache.spark.sql.types.StructType()
-      .add("id", del.schema("id").dataType)
-      .add("emb", org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType))
-      .add("centroid_id", org.apache.spark.sql.types.IntegerType)
-    val landed = readDelta(spark, assignPath, assignSchema)
+    // declared-schema read: a directory that exists but holds no data
+    // files — all grow waves landed empty — reads as zero landed versions
+    val landed = IvfAssign.read(spark, statePath, del.schema("id").dataType)
       .join(broadcast(del), Seq("id"))
-      .select(col("id"), col("batch_id").cast("long").as("dead_batch"))
+      .select(col("id"), col("batch_id").as("dead_batch"))
       .localCheckpoint()
     val baseOnly = del
       .join(landed.select(col("id")), Seq("id"), "left_anti")
       .select(col("id"), lit(-1L).as("dead_batch"))
-    landDelta(landed, s"$statePath/ivf_tombstones", batchId)
-    landDelta(baseOnly, s"$statePath/ivf_base_tombstones", batchId)
+    IvfTombstones.land(landed, statePath, batchId)
+    IvfBaseTombstones.land(baseOnly, statePath, batchId)
   }
 
   /** Physical reclaim of deleted GROWN vectors — [[mergeBm25Segments]]'
@@ -2651,51 +2259,21 @@ object StreamOps {
     * next retrain replaces it). Quiet-window single-writer, like every
     * compaction. Returns (versions reclaimed, live rows rewritten). */
   def reclaimIvfDeleted(spark: SparkSession, statePath: String): (Long, Long) =
-    reclaimDeadVersions(spark, s"$statePath/ivf_tombstones",
-      Seq(s"$statePath/ivf_assign" -> Seq("batch_id")))
+    reclaimDeadVersions(spark, statePath, IvfTombstones, Seq(IvfAssign))
 
-  /** Retention for [[ivfAssignPerBatch]]'s delta log. Unlike the label
-    * snapshots [[pruneSupersededBatches]] deletes, the assignments are
-    * append-only DATA — every row stays probe-reachable forever — so
-    * the growth to bound is FILE COUNT, not rows: thousands of one-file
-    * micro-batch partitions make the grown-index read a listing storm.
-    * Each `batch_id=` partition's files merge toward `targetBytes` via
-    * the SIGKILL-safe [[graft.sources.Sources.compactParquet]] (the c9
-    * corpus-promotion precedent); probes through [[grownIvfIndex]] are
-    * unchanged (spec-pinned), and the pass is schedulable at any cadence
-    * — the stream must be quiet for the staging window, like any
-    * single-writer compaction. Returns (files before, files after). */
-  def compactIvfAssignDeltas(spark: SparkSession, statePath: String,
-      targetBytes: Long = 128L << 20): (Long, Long) = {
-    val path = s"$statePath/ivf_assign"
-    if (!pathExists(spark, path)) (0L, 0L)
-    else graft.sources.Sources.compactParquet(spark, path, targetBytes)
-  }
-
-  /** [[compactIvfAssignDeltas]]'s twin for the semantic-dedup gate's
-    * append-only assignment log ([[semDedupPerBatch]]'s
-    * `statePath/sem_assign`) — same rationale, same staged-rename
-    * compactor, probes and later waves unchanged (the read path is the
-    * batch_id-pruned [[readDelta]], indifferent to file count). */
-  def compactSemAssignDeltas(spark: SparkSession, statePath: String,
-      targetBytes: Long = 128L << 20): (Long, Long) = {
-    val path = s"$statePath/sem_assign"
-    if (!pathExists(spark, path)) (0L, 0L)
-    else graft.sources.Sources.compactParquet(spark, path, targetBytes)
-  }
-
-  /** Delta-log compaction for [[bm25IndexPerBatch]]'s postings segments
-    * — the merge runs per leaf directory (each batch_id, shard pair
-    * independently), so probes' partition pruning and the
-    * one-segment-per-doc df invariant are untouched; only the file
-    * count shrinks (the Lucene segment-merge analog, schedulable
-    * whenever the stream is quiet). */
-  def compactBm25Postings(spark: SparkSession, statePath: String,
-      targetBytes: Long = 128L << 20): (Long, Long) = {
-    val path = s"$statePath/bm25_postings"
-    if (!pathExists(spark, path)) (0L, 0L)
-    else graft.sources.Sources.compactParquet(spark, path, targetBytes)
-  }
+  /** Merge the small files of one append-only state log (`table` names
+    * a [[StateCatalog]] log) toward `targetBytes` per partition — the
+    * retention an append-only log needs, since every row stays reachable:
+    * thousands of one-file micro-batch partitions would make each read a
+    * listing storm. Per leaf directory (`batch_id`, plus `shard` for the
+    * segment logs), so partition pruning, per-segment df sums and every
+    * serve's answer are unchanged (spec-pinned per log). SIGKILL-safe via
+    * [[graft.sources.Sources.compactParquet]]; the stream must be quiet
+    * for the staging window, like any single-writer compaction. An absent
+    * log is (0, 0). Returns (files before, files after). */
+  def compact(spark: SparkSession, statePath: String, table: String,
+      targetBytes: Long = 128L << 20): (Long, Long) =
+    StateCatalog(table).compact(spark, statePath, targetBytes)
 
   /** Streaming maintenance of the k8 deletion-variant (SymSpell) index —
     * the search tier's SECOND rolling artifact, under the k11 segment
@@ -2712,14 +2290,10 @@ object StreamOps {
     * ([[fuzzyServeRolling]]) answers k7/k8's typo resolution without
     * ever re-reading corpus text. */
   def fuzzyIndexPerBatch(docs: DataFrame, idCol: String, textCol: String,
-      shards: Int, statePath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        fuzzyIndexBatch(batch, idCol, textCol, shards, statePath, batchId)
-      }
-      .start()
+      shards: Int, statePath: String, checkpoint: String): StreamingQuery =
+    eachBatch(docs, Some(checkpoint)) { (batch, batchId) =>
+      fuzzyIndexBatch(batch, idCol, textCol, shards, statePath, batchId)
+    }
 
   /** One micro-batch of [[fuzzyIndexPerBatch]] — package-visible so the
     * spec can force a replay, k12 can drive batch waves and the composed
@@ -2728,11 +2302,8 @@ object StreamOps {
     * shuffle width: no count, no conf change. */
   private[graft] def fuzzyIndexBatch(batch: DataFrame, idCol: String,
       textCol: String, shards: Int, statePath: String, batchId: Long): Unit =
-    fuzzyWave(batch, idCol, textCol, shards, batchId)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id", "shard")
-      .parquet(s"$statePath/fuzzy_variants")
+    FuzzyVariants.land(fuzzyWave(batch, idCol, textCol, shards, batchId),
+      statePath, batchId)
 
   /** The (term, df, variant, shard, batch_id) rows one wave lands. A batch
     * at or below `maxBytes` ([[graft.operators.SizeRule]]) computes on one
@@ -2763,13 +2334,6 @@ object StreamOps {
       math.min(shards, batch.sparkSession.sparkContext.defaultParallelism),
       col("shard"))
   }
-
-  /** [[fuzzyIndexBatch]]'s on-disk schema, partition columns included:
-    * declared so a probe plans without a footer-reading job. */
-  private val FuzzyVariantSchema = StructType(Seq(
-    StructField("term", StringType), StructField("df", LongType),
-    StructField("variant", StringType), StructField("batch_id", LongType),
-    StructField("shard", IntegerType)))
 
   /** Typo-tolerant term resolution served from the ROLLING variant
     * segments — k8's serving plan over [[fuzzyIndexPerBatch]]'s state:
@@ -2805,14 +2369,14 @@ object StreamOps {
     val shardIds = qv
       .map(v => (graft.operators.PortableHash.hex60(v._2) % shards).toInt)
       .distinct
-    if (!hasParquetData(spark, s"$statePath/fuzzy_variants"))
+    if (!FuzzyVariants.hasData(spark, statePath))
       sys.error(s"fuzzyServeRolling: no variant segments landed at $statePath " +
         "— run fuzzyIndexPerBatch (or fuzzyIndexBatch) first")
-    // one root path and partition filters: explicit per-shard paths past
-    // 32 start Spark's parallel-listing job
+    // one root path and partition filters (explicit per-shard paths past
+    // 32 start Spark's parallel-listing job); the declared schema plans
+    // the probe without a footer-reading job
     val vvar = graft.operators.SizeRule.singlePartitionIfSmall(
-      spark.read.schema(FuzzyVariantSchema)
-        .parquet(s"$statePath/fuzzy_variants")
+      FuzzyVariants.read(spark, statePath)
         .filter(col("shard").isin(shardIds: _*) &&
           col("variant").isin(qv.map(_._2).distinct: _*) &&
           col("batch_id") <= asOf))
@@ -2833,16 +2397,6 @@ object StreamOps {
         col("df"))
   }
 
-  /** Delta-log compaction for [[fuzzyIndexPerBatch]]'s variant segments
-    * — per-leaf file merge like [[compactBm25Postings]]; probes'
-    * partition pruning and the per-segment df sums are untouched. */
-  def compactFuzzyVariants(spark: SparkSession, statePath: String,
-      targetBytes: Long = 128L << 20): (Long, Long) = {
-    val path = s"$statePath/fuzzy_variants"
-    if (!pathExists(spark, path)) (0L, 0L)
-    else graft.sources.Sources.compactParquet(spark, path, targetBytes)
-  }
-
   /** Streaming maintenance of the POSITIONAL index (k9/k10's at-rest
     * artifact) — the search tier's third rolling artifact, beside
     * [[bm25IndexPerBatch]]'s postings and [[fuzzyIndexPerBatch]]'s
@@ -2858,14 +2412,10 @@ object StreamOps {
     * positional index over each doc's LATEST version (spec + the k13
     * oracle, whose waves deliberately land a stale version first). */
   def posIndexPerBatch(docs: DataFrame, idCol: String, textCol: String,
-      shards: Int, statePath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        posIndexBatch(batch, idCol, textCol, shards, statePath, batchId)
-      }
-      .start()
+      shards: Int, statePath: String, checkpoint: String): StreamingQuery =
+    eachBatch(docs, Some(checkpoint)) { (batch, batchId) =>
+      posIndexBatch(batch, idCol, textCol, shards, statePath, batchId)
+    }
 
   /** One micro-batch of [[posIndexPerBatch]] — package-visible so the
     * spec can force a replay and k13 can drive batch waves. */
@@ -2885,19 +2435,14 @@ object StreamOps {
     val idType = batch.schema(idCol).dataType
     val ids = batch.select(col(idCol).as("id"))
     requireUniqueIds(ids, "posIndexBatch", batchId)
-    batch
+    PosPostings.land(batch
       .select(col(idCol).as("id"), posexplode(split(col(textCol), " ")))
       .toDF("id", "pos", "term")
       .withColumn("shard",
         pmod(graft.operators.PortableHash.hex60(col("term")),
-          lit(shards.toLong)).cast("int"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id", "shard")
-      .parquet(s"$statePath/pos_postings")
-    supersedeOnLand(spark, idType, ids, s"$statePath/pos_docs",
-      s"$statePath/pos_tombstones", batchId, payload = Nil)
+          lit(shards.toLong)).cast("int")), statePath, batchId)
+    supersedeOnLand(spark, idType, ids, PosDocs, PosTombstones, statePath,
+      batchId)
     ()
   }
 
@@ -2931,13 +2476,13 @@ object StreamOps {
     require(terms.nonEmpty, "positional probe needs at least one term")
     val shardIds = terms
       .map(t => (graft.operators.PortableHash.hex60(t) % shards).toInt).distinct
-    if (!hasParquetData(spark, s"$statePath/pos_postings"))
+    if (!PosPostings.hasData(spark, statePath))
       sys.error(s"posServeRolling: no positions landed at $statePath — " +
         "run posIndexPerBatch (or posIndexBatch) first")
-    val probed = spark.read.parquet(s"$statePath/pos_postings")
+    val probed = PosPostings.inferred(spark, statePath)
       .filter(col("shard").isin(shardIds: _*) && col("term").isin(terms: _*) &&
         col("batch_id").cast("long") <= asOf)
-    dropDeadVersions(spark, probed, s"$statePath/pos_tombstones", asOf)
+    dropDeadVersions(spark, probed, PosTombstones, statePath, asOf)
       .select(col("id").as("doc_id"), col("pos"), col("term"))
   }
 
@@ -2945,19 +2490,8 @@ object StreamOps {
     * tombstoned `batch_id=` partitions live-rows-only and clear the
     * log — same crash ordering, same leaf-dir reclaim. */
   def mergePosSegments(spark: SparkSession, statePath: String): (Long, Long) =
-    reclaimDeadVersions(spark, s"$statePath/pos_tombstones", Seq(
-      s"$statePath/pos_postings" -> Seq("batch_id", "shard"),
-      s"$statePath/pos_docs" -> Seq("batch_id")))
-
-  /** Delta-log compaction for [[posIndexPerBatch]]'s segments —
-    * per-leaf file merge like [[compactBm25Postings]]; probes'
-    * partition pruning is untouched. */
-  def compactPosPostings(spark: SparkSession, statePath: String,
-      targetBytes: Long = 128L << 20): (Long, Long) = {
-    val path = s"$statePath/pos_postings"
-    if (!pathExists(spark, path)) (0L, 0L)
-    else graft.sources.Sources.compactParquet(spark, path, targetBytes)
-  }
+    reclaimDeadVersions(spark, statePath, PosTombstones,
+      Seq(PosPostings, PosDocs))
 
   /** Physical reclaim of SUPERSEDED postings — the Lucene segment merge
     * that applies the delete bitmap: rewrite only the `batch_id=`
@@ -2976,14 +2510,13 @@ object StreamOps {
     * Single-writer quiet window assumed, like every compaction here.
     * Returns (tombstoned versions reclaimed, live postings rewritten). */
   def mergeBm25Segments(spark: SparkSession, statePath: String): (Long, Long) =
-    reclaimDeadVersions(spark, s"$statePath/bm25_tombstones", Seq(
-      s"$statePath/bm25_postings" -> Seq("batch_id", "shard"),
-      s"$statePath/bm25_doclens" -> Seq("batch_id")))
+    reclaimDeadVersions(spark, statePath, Bm25Tombstones,
+      Seq(Bm25Postings, Bm25Doclens))
 
   /** The segment merge shared by [[mergeBm25Segments]] and
     * [[mergePosSegments]]: physically reclaim the dead versions named
-    * by `tombsPath` across the given parquet families (path → its
-    * partition columns, `batch_id` first). For each family, only the
+    * by the `tombLog` across the given state `families` (logs whose
+    * versions it names, postings first). For each family, only the
     * `batch_id=` partitions the log names are rewritten live-rows-only
     * (materialized BEFORE the overwrite replaces the files they were
     * read from), leaf directories whose EVERY row died are deleted
@@ -3003,13 +2536,13 @@ object StreamOps {
     * (#re-ingested batches × shard fan-out), never by postings volume —
     * at 100 TB the collect stays a few thousand tuples while the
     * rewrite itself remains fully distributed. */
-  private def reclaimDeadVersions(spark: SparkSession, tombsPath: String,
-      families: Seq[(String, Seq[String])]): (Long, Long) = {
-    if (!hasParquetData(spark, tombsPath)) return (0L, 0L)
+  private def reclaimDeadVersions(spark: SparkSession, statePath: String,
+      tombLog: Table, families: Seq[Table]): (Long, Long) = {
+    if (!tombLog.hasData(spark, statePath)) return (0L, 0L)
     // distinct: a victim deleted in two different waves lands the same
     // (id, dead_batch) tombstone twice — one physical row dies, so the
     // reported count (and the anti/semi join probes) dedup first
-    val tombs = spark.read.parquet(tombsPath)
+    val tombs = tombLog.inferred(spark, statePath)
       .select(col("id").as("t_id"), col("dead_batch"))
       .distinct().localCheckpoint()
     val nDead = tombs.count()
@@ -3017,11 +2550,12 @@ object StreamOps {
       .collect().map(_.getLong(0)).toSeq
     def isDead(df: DataFrame) =
       df("id") === col("t_id") && df("batch_id").cast("long") === col("dead_batch")
-    val fs = new org.apache.hadoop.fs.Path(tombsPath)
+    val fs = new org.apache.hadoop.fs.Path(tombLog.dir(statePath))
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     var firstLive = 0L
-    families.zipWithIndex.foreach { case ((path, parts), fi) =>
-      val affected = spark.read.parquet(path)
+    families.zipWithIndex.foreach { case (family, fi) =>
+      val (path, parts) = (family.dir(statePath), family.partitions)
+      val affected = family.inferred(spark, statePath)
         .filter(col("batch_id").isin(deadBatches: _*))
       val live = affected.join(tombs, isDead(affected), "left_anti")
         .localCheckpoint()
@@ -3039,7 +2573,7 @@ object StreamOps {
         fs.delete(new org.apache.hadoop.fs.Path(s"$path/$leaf"), true)
       }
     }
-    fs.delete(new org.apache.hadoop.fs.Path(tombsPath), true)
+    fs.delete(new org.apache.hadoop.fs.Path(tombLog.dir(statePath)), true)
     (nDead, firstLive)
   }
 
@@ -3070,10 +2604,7 @@ object StreamOps {
     * from-scratch a4-style clustering of everything arrived under the
     * same frozen quantizer (spec-pinned — the i8-twin equality, not
     * i6's: retraining stays the audit-driven i10 event). State:
-    * `statePath/sem_assign` append-only assignment deltas (batch_id-
-    * partitioned, replay-idempotent, compactable like
-    * [[compactIvfAssignDeltas]]); `statePath/sem_labels` full-table
-    * snapshots pruned to latest+previous ([[pruneSupersededBatches]]).
+    * the `sem_assign` log and the `sem_labels` snapshot ([[StateCatalog]]).
     * `staticAssign` is the corpus inverted file (id, emb, centroid_id);
     * `seedLabels` the labels a batch run produced over the static
     * corpus (empty frame for a cold start). The sink receives the
@@ -3082,15 +2613,11 @@ object StreamOps {
       centroids: Seq[(Int, Seq[Double])], staticAssign: DataFrame,
       seedLabels: DataFrame, idCol: String, embCol: String,
       threshold: Double, statePath: String, checkpoint: String)
-      (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(semDedupBatch(batch, centroids, staticAssign, seedLabels,
-          idCol, embCol, threshold, statePath, batchId), batchId)
-      }
-      .start()
+      (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    eachBatch(vectors, Some(checkpoint)) { (batch, batchId) =>
+      sink(semDedupBatch(batch, centroids, staticAssign, seedLabels,
+        idCol, embCol, threshold, statePath, batchId), batchId)
+    }
 
   /** One micro-batch of [[semDedupPerBatch]] — package-visible so the
     * spec can force a replay and batch callers can drive the same code
@@ -3123,27 +2650,17 @@ object StreamOps {
     * out so the composed gate computes the assignment ONCE and feeds
     * both the IVF-growth land and this gate. */
   private def semAdvance(asg: DataFrame, staticAssign: DataFrame,
-      seedLabels: DataFrame,
-      idType: org.apache.spark.sql.types.DataType,
+      seedLabels: DataFrame, idType: DataType,
       threshold: Double, statePath: String, batchId: Long): DataFrame = {
     val spark = asg.sparkSession
     graft.functions.DotProduct.register(spark)
     val dot = graft.functions.DotProduct.dotProduct _
-    val labSchema = new org.apache.spark.sql.types.StructType()
-      .add("id", idType).add("component", idType)
-    val asgSchema = new org.apache.spark.sql.types.StructType()
-      .add("id", idType)
-      .add("emb", org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType))
-      .add("centroid_id", org.apache.spark.sql.types.IntegerType)
     // landed side: static inverted file ∪ assignment deltas of batches
     // STRICTLY BELOW this one (a replayed batch must not see its own
     // landed delta) ∪ the batch itself (within-batch near-dups). The
     // norm is computed during the same-cluster scan the cosine needs
     // anyway — never a second pass over the corpus.
-    val landed = readDelta(spark, s"$statePath/sem_assign", asgSchema)
-      .filter(col("batch_id") < batchId)
-      .select(col("id"), col("emb"), col("centroid_id"))
+    val landed = SemAssign.before(spark, statePath, batchId, idType)
     val base = staticAssign.select(col("id"), col("emb"), col("centroid_id"))
       .unionByName(landed)
       .withColumn("nrm", sqrt(dot(col("emb"), col("emb"))))
@@ -3160,35 +2677,23 @@ object StreamOps {
       .select(least(col("a.id"), col("b.id")).as("id_a"),
         greatest(col("a.id"), col("b.id")).as("id_b"))
       .distinct()
-    val prev = latestSnapshotOr(spark, s"$statePath/sem_labels", labSchema,
-      seedLabels.select(col("id"), col("component")), batchId)
+    val prev = SemLabels.latest(spark, statePath, batchId, idType, seedLabels)
     val labels = graft.operators.ConnectedComponents
       .incrementalStepWith(prev, pairs)(_.localCheckpoint())
-    landDelta(asg.select(col("id"), col("emb"), col("centroid_id")),
-      s"$statePath/sem_assign", batchId)
-    // landSnapshot, not landDelta: an empty label frontier must stay
-    // visible to semLabelsAsOf's pruned-vs-empty check
-    landSnapshot(labels, s"$statePath/sem_labels", batchId)
-    pruneSupersededBatches(spark, s"$statePath/sem_labels")
+    SemAssign.land(asg.select(col("id"), col("emb"), col("centroid_id")),
+      statePath, batchId)
+    SemLabels.land(labels, statePath, batchId)
     labels
   }
 
   /** [[labelsAsOf]] for the SEMANTIC dedup label table (`sem_labels`,
     * [[semDedupPerBatch]]'s snapshot family) — which vectors were in
     * the same embedding-space dedup group when batch `asOf` was the
-    * frontier. Same snapshot pick, same loud failure past the keep=2
-    * retention, same seed fallback for the genuine cold start. With
-    * this and [[kanonAsOf]], every rolling state family the deployment
-    * stream maintains is time-travelable. */
+    * frontier. With this and [[kanonAsOf]], every rolling state family
+    * the deployment stream maintains is time-travelable. */
   def semLabelsAsOf(spark: SparkSession, statePath: String,
-      seedLabels: => DataFrame,
-      idType: org.apache.spark.sql.types.DataType, asOf: Long): DataFrame = {
-    val labSchema = new org.apache.spark.sql.types.StructType()
-      .add("id", idType).add("component", idType)
-    latestSnapshotOr(spark, s"$statePath/sem_labels", labSchema,
-      seedLabels.select(col("id"), col("component")),
-      snapshotReachBound(spark, s"$statePath/sem_labels", asOf, "semLabels"))
-  }
+      seedLabels: => DataFrame, idType: DataType, asOf: Long): DataFrame =
+    SemLabels.asOf(spark, statePath, asOf, idType, seedLabels)
 
   /** Everything the composed deployment stream's gates need, bundled:
     * the frozen artifacts a deployment pins (MinHash index over the
@@ -3263,30 +2768,27 @@ object StreamOps {
     * stream dies. */
   def deployGatesPerBatch(docs: DataFrame, cfg: DeployGatesConfig,
       checkpoint: String)(sink: (DeployGatesReport, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     require(cfg.frozenLevel >= 0 && cfg.frozenLevel <= 2,
       s"frozenLevel must be one of d43's generalization levels 0..2, got ${cfg.frozenLevel}")
     require(cfg.maintainEvery >= 0,
       s"maintainEvery must be >= 0 (0 disables), got ${cfg.maintainEvery}")
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val report = deployGatesBatch(batch, cfg, batchId)
-        sink(report, batchId)
-        enforceKAnon(report.kanonReport, cfg.frozenLevel)
-        // auto-maintenance INSIDE the uncommitted batch: a crash mid-
-        // maintain replays the whole foreachBatch body (idempotent
-        // lands, then the full maintain) — every maintain step is
-        // individually crash-safe (the prefix-replay spec), so the
-        // half-done pass is just extra retention work, never a
-        // serving-visible state
-        if (cfg.maintainEvery > 0 && (batchId + 1) % cfg.maintainEvery == 0) {
-          maintain(batch.sparkSession, cfg.statePath,
-            Some(LandedCorpus(cfg.outPath, cfg.staticCorpusIds, cfg.idCol)))
-          ()
-        }
+    eachBatch(docs, Some(checkpoint)) { (batch, batchId) =>
+      val report = deployGatesBatch(batch, cfg, batchId)
+      sink(report, batchId)
+      enforceKAnon(report.kanonReport, cfg.frozenLevel)
+      // auto-maintenance INSIDE the uncommitted batch: a crash mid-
+      // maintain replays the whole foreachBatch body (idempotent
+      // lands, then the full maintain) — every maintain step is
+      // individually crash-safe (the prefix-replay spec), so the
+      // half-done pass is just extra retention work, never a
+      // serving-visible state
+      if (cfg.maintainEvery > 0 && (batchId + 1) % cfg.maintainEvery == 0) {
+        maintain(batch.sparkSession, cfg.statePath,
+          Some(LandedCorpus(cfg.outPath, cfg.staticCorpusIds, cfg.idCol)))
+        ()
       }
-      .start()
+    }
   }
 
   /** One micro-batch of [[deployGatesPerBatch]] — package-visible so the
@@ -3307,10 +2809,10 @@ object StreamOps {
           .localCheckpoint() // eager — consumed after pairs unpersists
         promoteClean(cached, pairs, cfg.staticCorpusIds, cfg.evalSet,
           cfg.idCol, cfg.textCol, cfg.decontamN, cfg.outPath, batchId)
-        val prevLabels = landedLabelsBefore(spark, cfg.statePath,
-          cfg.seedLabels, idType, batchId)
-        val prevState = repStateBefore(spark, cfg.statePath,
-          cfg.seedRepState, idType, batchId)
+        val prevLabels = Labels.latest(spark, cfg.statePath, batchId, idType,
+          cfg.seedLabels)
+        val prevState = Rep.latest(spark, cfg.statePath, batchId, idType,
+          cfg.seedRepState)
         val labels = ccAdvance(prevLabels, pairs, cfg.statePath, batchId)
         val repState = repAdvance(labels, prevLabels, prevState,
           cfg.scores, idType, cfg.statePath, batchId)
@@ -3338,8 +2840,8 @@ object StreamOps {
           .withColumn("nrm", sqrt(dot(col("emb"), col("emb"))))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          landDelta(asg.select(col("id"), col("emb"), col("centroid_id")),
-            s"${cfg.statePath}/ivf_assign", batchId)
+          IvfAssign.land(asg.select(col("id"), col("emb"), col("centroid_id")),
+            cfg.statePath, batchId)
           val semLabels = semAdvance(asg, cfg.staticAssign,
             cfg.semSeedLabels, idType, cfg.semThreshold, cfg.statePath,
             batchId)
@@ -3369,8 +2871,8 @@ object StreamOps {
     // compactLandedInPlace truncates this history like any VACUUM.
     val landed = spark.read.parquet(outPath)
       .filter(col("batch_id").cast("long") <= asOf)
-    if (!pathExists(spark, s"$statePath/pairs")) return landed
-    val pairs = spark.read.parquet(s"$statePath/pairs")
+    if (!Pairs.exists(spark, statePath)) return landed
+    val pairs = Pairs.inferred(spark, statePath)
       .filter(col("batch_id").cast("long") <= asOf)
     val staticIds = staticCorpusIds.select(col(idCol).as("cid"))
     val drops = pairs.select(col("id_b").as("id"))
@@ -3395,10 +2897,10 @@ object StreamOps {
   def compactLandedInPlace(spark: SparkSession, outPath: String,
       statePath: String, staticCorpusIds: DataFrame, idCol: String)
       : (Long, Long) = {
-    if (!hasParquetData(spark, outPath) ||
-        !pathExists(spark, s"$statePath/pairs")) return (0L, 0L)
+    if (!hasParquetData(spark, outPath) || !Pairs.exists(spark, statePath))
+      return (0L, 0L)
     val landed = spark.read.parquet(outPath)
-    val pairs = spark.read.parquet(s"$statePath/pairs")
+    val pairs = Pairs.inferred(spark, statePath)
     val staticIds = staticCorpusIds.select(col(idCol).as("cid"))
     val drops = pairs.select(col("id_b").as("id"))
       .unionByName(pairs.join(staticIds, col("id_b") === col("cid"))
@@ -3450,15 +2952,14 @@ object StreamOps {
   /** ONE maintenance entry point for a gate `statePath` (composed or
     * solo — the layouts are identical): every retention and compaction
     * primitive this module ships, run on one cadence instead of five
-    * separate calls. Steps, in order: re-prune the snapshot families
-    * (labels, rep, sem_labels, kanon, bm25_stats — normally pruned
-    * inline per land; this is the safety net for lands that crashed
-    * after the write and before the prune), apply the BM25 delete
-    * bitmap ([[mergeBm25Segments]]), retro-drop the landed corpus when
-    * `landed` is given ([[compactLandedInPlace]]), then merge small
-    * files across every append-only delta family
-    * ([[graft.sources.Sources.compactParquet]] per directory; absent
-    * directories are skipped). Single-WRITER quiet window assumed,
+    * separate calls. Steps, in order: re-prune every [[StateCatalog]]
+    * snapshot (normally pruned inline per land; this is the safety net
+    * for lands that crashed after the write and before the prune), apply
+    * the BM25 and positional delete bitmaps ([[mergeBm25Segments]],
+    * [[mergePosSegments]]), retro-drop the landed corpus when `landed`
+    * is given ([[compactLandedInPlace]]), then [[compact]] every
+    * append-only log (absent directories are skipped), then sweep the
+    * at-rest artifact volume. Single-WRITER quiet window assumed,
     * like each primitive alone. READERS are isolated by the pinned-
     * read-version rule: the text serving paths ([[bm25ServeRolling]],
     * [[posServeRolling]], [[fuzzyServeRolling]]) eagerly pin their
@@ -3491,53 +2992,17 @@ object StreamOps {
   private[graft] def maintainSteps(spark: SparkSession, statePath: String,
       landed: Option[LandedCorpus], targetBytes: Long)
       : Seq[(String, () => (Long, Long))] = {
-    def partitions(path: String): Long = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) 0L
-      else fs.listStatus(p).count(st =>
-        st.isDirectory && st.getPath.getName.startsWith("batch_id=")).toLong
-    }
-    def prune(name: String) = s"prune_$name" -> { () =>
-      val dir = s"$statePath/$name"
-      val before = partitions(dir)
-      pruneSupersededBatches(spark, dir)
-      (before, partitions(dir))
-    }
-    def merge(name: String) = s"compact_$name" -> { () =>
-      val dir = s"$statePath/$name"
-      if (!pathExists(spark, dir)) (0L, 0L)
-      else graft.sources.Sources.compactParquet(spark, dir, targetBytes)
-    }
     Seq(
-      prune("labels"), prune("rep"), prune("sem_labels"),
-      prune("kanon"), prune("bm25_stats"),
-      // pr snapshots are pruned inline by pagerankEdgesBatch; repeating
-      // the prune here keeps maintain() the one complete retention sweep
-      // (a stream killed between land and inline prune leaves a
-      // superseded snapshot behind until the next wave)
-      prune("pr"),
-      "merge_bm25_segments" -> (() => mergeBm25Segments(spark, statePath)),
-      "merge_pos_segments" -> (() => mergePosSegments(spark, statePath))) ++
-      landed.map { lc =>
+      tables.filter(_.kind == Snapshot).map(t =>
+        s"prune_${t.name}" -> (() => t.prune(spark, statePath))),
+      Seq("merge_bm25_segments" -> (() => mergeBm25Segments(spark, statePath)),
+        "merge_pos_segments" -> (() => mergePosSegments(spark, statePath))),
+      landed.toSeq.map { lc =>
         "compact_landed" -> (() => compactLandedInPlace(spark, lc.outPath,
           statePath, lc.staticCorpusIds, lc.idCol))
-      } ++
-      Seq("ivf_assign", "sem_assign", "bm25_postings", "bm25_doclens",
-        "fuzzy_variants", "pos_postings", "pos_docs",
-        "pairs", "bands", "shingles", "sizes",
-        // pr_edges is the append-only edge delta pagerankEdgesBatch lands
-        // per wave — without compaction a long-running stream accumulates
-        // unbounded small files, contrary to the documented posture that
-        // append-only deltas are bounded by compactParquet
-        "pr_edges",
-        // the rolling image/audio/video families' append-only deltas
-        // (fingerprint bands + discovered pairs) — same unbounded-small-
-        // files argument
-        "img_fp", "img_nd", "aud_fp", "aud_nd", "vid_fp", "vid_nd",
-        // the rolling span-dedup family's gram log + covered-event log
-        // + the arrived-document universe the serving schema reads
-        "span_grams", "span_events", "span_doclens").map(merge) ++
+      },
+      tables.filter(_.kind == Log).map(t =>
+        s"compact_${t.name}" -> (() => t.compact(spark, statePath, targetBytes))),
       // the at-rest artifact volume's retention sweep (round 19): evict
       // every family's non-current fingerprints under that family's
       // FileLock — see [[graft.queries.ScaleOps.gcArtifacts]]. Reported
@@ -3546,7 +3011,7 @@ object StreamOps {
         val evicted = graft.queries.ScaleOps.gcArtifacts()
         (evicted.size.toLong,
           graft.queries.ScaleOps.artifactManifest().size.toLong)
-      })
+      })).flatten
   }
 
   /** Checkpointed parquet sink: exactly-once file output via the commit
@@ -3554,7 +3019,7 @@ object StreamOps {
     * resumes after the last committed batch instead of re-emitting it.
     * Returns the started query (caller stops it). */
   def sinkParquet(df: DataFrame, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : StreamingQuery =
     df.writeStream
       .format("parquet")
       .option("path", path)

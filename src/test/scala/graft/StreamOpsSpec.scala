@@ -1241,7 +1241,7 @@ class StreamOpsSpec extends AnyFunSuite {
       "vec_id", "embedding", k = 4, iters = 2, roundDecimals = 6)
     try {
       // absent delta log → no-op, not an error
-      assert(StreamOps.compactIvfAssignDeltas(spark, state) == ((0L, 0L)))
+      assert(StreamOps.compact(spark, state, "ivf_assign") == ((0L, 0L)))
       // two waves, each deliberately written WIDE (8 shuffle files per
       // batch_id partition) — the many-small-files shape compaction fixes
       val late = e.filter(col("vec_id") >= split)
@@ -1258,7 +1258,7 @@ class StreamOpsSpec extends AnyFunSuite {
           .toSeq
       val beforeRows = rows()
       assert(beforeRows.exists(_._2 >= split), "deltas not probe-reachable")
-      val (before, after) = StreamOps.compactIvfAssignDeltas(spark, state)
+      val (before, after) = StreamOps.compact(spark, state, "ivf_assign")
       assert(before > after && after == 2L, s"files $before -> $after")
       assert(rows() == beforeRows)
     } finally base.close()
@@ -1372,6 +1372,94 @@ class StreamOpsSpec extends AnyFunSuite {
     } finally graft.sources.Sources.deleteRecursively(root.toFile)
   }
 
+  /** Every landed row of the named state tables under `state`, read with
+    * their declared schemas, `batch_id` included. */
+  private def landedRows(state: String, names: Seq[String]): Map[String, Set[Seq[Any]]] =
+    names.map(n => n -> graft.streaming.StateCatalog(n).read(spark, state)
+      .collect().map(_.toSeq.toVector: Seq[Any]).toSet).toMap
+
+  test("rollingRepPerBatch: streamed waves equal the direct batch drive, sink and landed state") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("rollrepstream")
+    val streamState = root.resolve("s").toString
+    val twinState = root.resolve("t").toString
+    val threshold = 0.3
+    val t10 = "the quick brown fox jumps over the lazy dog near the riverbank every morning"
+    try {
+      val corpus = Seq(10L -> t10, 11L -> t10.replace("morning", "evening"))
+        .toDF("doc_id", "text")
+      val staticIndex = graft.operators.MinHashDedup
+        .buildDedupIndex(corpus, "doc_id", "text")
+      val seed = graft.operators.ConnectedComponents.components(
+        graft.operators.MinHashDedup
+          .nearDuplicates(corpus, "doc_id", "text", threshold)
+          .select(col("id_a"), col("id_b"))).localCheckpoint()
+      val scores = Seq(10L -> 40L, 11L -> 55L, 100L -> 30L, 101L -> 90L,
+        102L -> 20L).toDF("id", "q_e6")
+      val seedState = StreamOps.repStateOf(seed, scores).localCheckpoint()
+      val waves = Seq(
+        Seq(StreamDoc(100L, t10.replace("morning", "midday"))),
+        Seq(StreamDoc(101L, t10.replace("morning", "noon")),
+          StreamDoc(102L, t10.replace("every morning", "each morning"))))
+      def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+        df.collect().map(_.toSeq.toVector: Seq[Any]).toSet
+      val sunk = scala.collection.mutable.Map[Long, (Set[Seq[Any]], Set[Seq[Any]])]()
+      val ms = MemoryStream[StreamDoc]
+      val q = StreamOps.rollingRepPerBatch(ms.toDF(), staticIndex, seed,
+        seedState, scores, "doc_id", "text", threshold, streamState,
+        root.resolve("ck").toString) { (labels, state, id) =>
+        sunk(id) = (rows(labels), rows(state))
+      }
+      try waves.foreach { w => ms.addData(w: _*); q.processAllAvailable() }
+      finally q.stop()
+      val direct = waves.zipWithIndex.map { case (w, b) =>
+        val (l, s) = StreamOps.rollingRepBatch(w.toDF(), staticIndex, seed,
+          seedState, scores, "doc_id", "text", threshold, twinState, b.toLong)
+        (rows(l), rows(s))
+      }
+      assert(sunk.toMap == direct.indices.map(b => b.toLong -> direct(b)).toMap)
+      // the late high-quality arrival took the representative slot
+      assert(direct(1)._2.exists(r => r(0) == 10L && r(4) == 101L), direct(1)._2)
+      val tables = Seq("labels", "rep", "pairs", "bands", "shingles", "sizes")
+      assert(landedRows(streamState, tables) == landedRows(twinState, tables))
+      spark.catalog.clearCache()
+    } finally graft.sources.Sources.deleteRecursively(root.toFile)
+  }
+
+  test("audioNdPerBatch: streamed waves equal the direct batch drive, pair log and landed state") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("audndstream")
+    val streamState = root.resolve("s").toString
+    val twinState = root.resolve("t").toString
+    try {
+      // identical texts render to identical WAVs: one cross-wave pair
+      val text = "render me into samples for the audio dedup sweep"
+      val waves = Seq(
+        Seq(StreamDoc(500L, text), StreamDoc(501L, "a completely different payload")),
+        Seq(StreamDoc(502L, text), StreamDoc(503L, "yet another unrelated body")))
+      val ms = MemoryStream[StreamDoc]
+      val q = StreamOps.audioNdPerBatch(ms.toDF(), streamState,
+        root.resolve("ck").toString)
+      try waves.foreach { w => ms.addData(w: _*); q.processAllAvailable() }
+      finally q.stop()
+      waves.zipWithIndex.foreach { case (w, b) =>
+        StreamOps.audioNdBatch(w.toDF(), twinState, b.toLong) }
+      def pairs(state: String): Set[(Long, Long, Int)] =
+        StreamOps.audioNdAsOf(spark, state, Long.MaxValue)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      assert(pairs(streamState) == pairs(twinState))
+      assert(pairs(streamState).map(p => (p._1, p._2)) == Set((500L, 502L)),
+        pairs(streamState))
+      val tables = Seq("aud_fp", "aud_nd")
+      assert(landedRows(streamState, tables) == landedRows(twinState, tables))
+      spark.catalog.clearCache()
+    } finally graft.sources.Sources.deleteRecursively(root.toFile)
+  }
+
   test("ivfAssignPerBatch (i8 twin): probing the grown index equals the batch frozen-quantizer construction") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
@@ -1465,7 +1553,7 @@ class StreamOpsSpec extends AnyFunSuite {
       .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
     assert(parts.size <= 2, s"stats partitions: ${parts.map(_.getName)}")
     // segment-merge compaction leaves served scores unchanged
-    val (fb, fa) = StreamOps.compactBm25Postings(spark, state)
+    val (fb, fa) = StreamOps.compact(spark, state, "bm25_postings")
     assert(fb >= fa && fa > 0, s"compaction: $fb -> $fa")
     assert(scores(StreamOps.bm25ServeRolling(spark, state, terms, 8)
       .filter(col("score") > 0)) == rescan)
@@ -1646,7 +1734,7 @@ class StreamOpsSpec extends AnyFunSuite {
       // compacting the assignment delta log changes nothing downstream:
       // the same replay reads the compacted files and lands identically
       val (filesBefore, filesAfter) =
-        StreamOps.compactSemAssignDeltas(spark, state)
+        StreamOps.compact(spark, state, "sem_assign")
       assert(filesBefore >= filesAfter && filesAfter > 0,
         s"compaction: $filesBefore -> $filesAfter")
       val afterCompact = StreamOps.semDedupBatch(
@@ -1757,7 +1845,7 @@ class StreamOpsSpec extends AnyFunSuite {
       16, state, 1L)
     assert(rows(StreamOps.fuzzyServeRolling(spark, state, queryTerms, 16)) == oneShot)
     // segment compaction leaves answers unchanged
-    val (fb, fa) = StreamOps.compactFuzzyVariants(spark, state)
+    val (fb, fa) = StreamOps.compact(spark, state, "fuzzy_variants")
     assert(fb >= fa && fa > 0, s"compaction: $fb -> $fa")
     assert(rows(StreamOps.fuzzyServeRolling(spark, state, queryTerms, 16)) == oneShot)
     spark.catalog.clearCache()
@@ -2049,7 +2137,7 @@ class StreamOpsSpec extends AnyFunSuite {
     land(3L, Seq(d4v2))
     assert(served() == oneShot(Seq(d1v0, d2v2, d3v0, d4v2)))
     // file-merge compaction leaves the probe unchanged
-    val (cb, ca) = StreamOps.compactPosPostings(spark, state)
+    val (cb, ca) = StreamOps.compact(spark, state, "pos_postings")
     assert(cb >= ca && ca > 0, s"compaction: $cb -> $ca")
     assert(served() == oneShot(Seq(d1v0, d2v2, d3v0, d4v2)))
     // two versions of a doc in ONE batch is the guarded invariant
@@ -2479,6 +2567,63 @@ class StreamOpsSpec extends AnyFunSuite {
       StreamOps.maintain(spark, cfg.statePath, landedCfg)
       assert(reads() == baseline)
     } finally idx.close()
+    spark.catalog.clearCache()
+  }
+
+  test("state catalog: every landed directory is a declared table, and maintain prunes every snapshot and compacts every log") {
+    import spark.implicits._
+    import java.nio.file.Files
+    import DeployFixture._
+    import graft.streaming.StateCatalog
+    val root = Files.createTempDirectory("catalog")
+    val idx = graft.operators.IvfSearch.buildIndex(staticVecs, "vec_id",
+      "embedding", k = 2, iters = 2, roundDecimals = 6)
+    try {
+      val cfg = config(idx, root)
+      val st = cfg.statePath
+      val noPairs = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+      val media = Seq(
+        Seq(500L -> "render me into pixels and samples", 501L -> "another payload"),
+        Seq(502L -> "render me into pixels and samples", 503L -> "unrelated body"))
+      val spans = Seq(Seq(600L -> "sp1 sp2 sp3 sp4 sp5 sp6 sp7 sp8 trail"),
+        Seq(602L -> "lead sp1 sp2 sp3 sp4 sp5 sp6 sp7 sp8"))
+      Seq(wave0, wave1).zipWithIndex.foreach { case (w, i) =>
+        val b = i.toLong
+        StreamOps.deployGatesBatch(waveDf(w), cfg, b)
+        StreamOps.pagerankBatch(waveDf(w).select("doc_id", "text"), staticIndex,
+          noPairs, "doc_id", "text", threshold, 2, 850000L, st, b)
+        val m = media(i).toDF("doc_id", "text")
+        StreamOps.imageNdBatch(m, st, b)
+        StreamOps.audioNdBatch(m, st, b)
+        StreamOps.videoNdBatch(m, st, b)
+        StreamOps.spanDedupBatch(spans(i).toDF("doc_id", "text"), st, b)
+        StreamOps.ivfDeleteBatch(Seq(103L + i, 10L + i).toDF("id"), st, b)
+      }
+      // a re-ingested doc, so both text families land tombstones too
+      StreamOps.bm25IndexBatch(Seq(101L -> "a revised second wave document")
+        .toDF("doc_id", "text"), "doc_id", "text", 8, st, 2L)
+      StreamOps.posIndexBatch(Seq(101L -> "a revised second wave document")
+        .toDF("doc_id", "text"), "doc_id", "text", 16, st, 2L)
+      val landed = new java.io.File(st).listFiles().filter(_.isDirectory)
+        .map(_.getName).toSet
+      val declared = StateCatalog.tables.map(_.name)
+      assert(declared.distinct.size == declared.size)
+      assert(landed -- declared == Set.empty, "undeclared state tables")
+      assert(landed == declared.toSet, s"declared but not landed: ${declared.toSet -- landed}")
+      val steps = StreamOps.maintainSteps(spark, st, None, 128L << 20).map(_._1)
+      def ofKind(k: StateCatalog.Kind) =
+        StateCatalog.tables.filter(_.kind == k).map(_.name)
+      assert(ofKind(StateCatalog.Snapshot).map(t => s"prune_$t")
+        .forall(steps.contains), steps)
+      assert(ofKind(StateCatalog.Log).map(t => s"compact_$t")
+        .forall(steps.contains), steps)
+      // tombstone logs are cleared by the segment merges, never compacted
+      assert(ofKind(StateCatalog.Tombstones).forall(t =>
+        !steps.contains(s"compact_$t") && !steps.contains(s"prune_$t")))
+    } finally {
+      idx.close()
+      graft.sources.Sources.deleteRecursively(root.toFile)
+    }
     spark.catalog.clearCache()
   }
 
